@@ -2159,11 +2159,19 @@ _HB_NUM = 0.709 * HB_M * HB_M * float(1 << _HB_SCALE)
 #: exports n_regs_set for consumers instead), but V has only m-1
 #: possible values, so the correction is a PRECOMPUTED literal lookup
 #: table shipped identically to both engines: no libm call exists in
-#: any query plan.
+#: any query plan. Entries round HALF_UP at 4 decimals from the shortest
+#: repr, the same rounding Spark's round(double, 4) applies to every other
+#: 4-decimal estimate.
 import math as _math
+from decimal import ROUND_HALF_UP as _HALF_UP, Decimal as _Decimal
 
 _HB_LC = tuple(
-    round(HB_M * _math.log(HB_M / v), 4) for v in range(1, HB_M)
+    float(
+        _Decimal(repr(HB_M * _math.log(HB_M / v))).quantize(
+            _Decimal("0.0001"), rounding=_HALF_UP
+        )
+    )
+    for v in range(1, HB_M)
 )
 #: LC applies when the raw estimate is at or below this (2.5 * m)
 _HB_LC_BAR = 2.5 * HB_M
@@ -2351,8 +2359,12 @@ def harmonic_centrality(edges: DataFrame, t_max: int = 3) -> DataFrame:
     ONE node with a FIXED left-fold expression tree
     ``((e1-e0)/1 + (e2-e1)/2) + ...`` so no float reordering exists for
     an aggregate to introduce — both engines evaluate byte-identical
-    IEEE-754 plans. Registers only accumulate, so est is monotone
-    non-decreasing in t and every delta is >= 0.
+    IEEE-754 plans. Registers only accumulate, so each branch of est
+    (linear counting, raw estimate) is non-decreasing in t on its own,
+    but the switch between them is not strictly monotone: a delta can
+    in principle go negative for a pathological register state. In
+    practice the deltas are non-negative, and nothing clamps them —
+    both engines evaluate the same plan, so they agree either way.
 
     Output: ``(node, reach, harmonic)`` — reach = est at T (ball size
     incl. self), harmonic = round(H_T, 4).

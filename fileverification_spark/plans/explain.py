@@ -5,11 +5,14 @@ assertable checks, used by tests to pin scale-critical plan properties:
 - scans read only the columns the query needs (ReadSchema),
 - small-side joins actually broadcast (BroadcastHashJoin),
 - the hot path stays inside WholeStageCodegen.
+
+It also reads the JVM's code-generation counters, so a run can report
+how much generated code it compiled.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -105,3 +108,29 @@ def codegen_stage_count(df: DataFrame) -> int:
     import re
 
     return len(set(re.findall(r"codegen id : (\d+)", formatted_plan(df))))
+
+
+def codegen_counters(spark: SparkSession) -> dict[str, int]:
+    """Cumulative code-generation counters of the session's JVM, for
+    before/after deltas around a run:
+
+    - ``compiles``: Janino compilations — each is a miss in Spark's
+      generated-code cache (``spark.sql.codegen.cache.maxEntries``);
+    - ``compile_ms``: total Janino compile time;
+    - ``classes``: generated classes handed to the JVM (a compile yields
+      its outer class plus any split-out inner classes);
+    - ``jit_ms``: the JVM's total JIT compile time, which every new
+      generated class pays again.
+
+    The counters are JVM-local: in local mode that covers driver and
+    executors; on a cluster it covers the driver only."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return {
+        "compiles": metrics.METRIC_COMPILATION_TIME().getCount(),
+        "compile_ms": codegen.compileTime() // 1_000_000,
+        "classes": metrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount(),
+        "jit_ms": jit.getTotalCompilationTime(),
+    }

@@ -13,6 +13,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Entries in Spark's generated-code cache (``spark.sql.codegen.cache.
+#: maxEntries``, default 100). The cache is an LRU over compiled classes,
+#: so a pass whose working set is larger than the cache misses on every
+#: repeat: it recompiles the same classes with Janino, and the JVM JITs
+#: the new classes again. Working sets measured with
+#: ``plans.explain.codegen_counters`` (compiles in one cold pass):
+#: verify_e1 45; the spatial_graph benchmark pass 160; the spatial + graph
+#: operator mix on the sf0.001 fixtures 159; one pass of the 50-query
+#: driver window at sf0.001 about 1015, of which about 50 generate new
+#: code on every pass and can never hit. At 100 entries a repeated
+#: spatial_graph pass recompiles about 147 classes; at 1000 the window
+#: still recompiled 284 per repeated pass, at 2048 only its ~50 that
+#: always miss. An entry exists only for a class actually compiled, so
+#: the larger bound costs memory only when a working set fills it. The
+#: size follows from the engine's own query set, not from the
+#: deployment, so it is a constant rather than an env var (``extra_conf``
+#: can still override it).
+CODEGEN_CACHE_ENTRIES = 2048
+
 
 def get_spark(
     app_name: str = "fileverification_spark",
@@ -49,6 +68,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # static conf: only a builder setting reaches the JVM-wide cache
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # shuffle/spill on tmpfs when available: local[N] funnels every
     # shuffle through one disk, which caps CPU scaling measurements; a

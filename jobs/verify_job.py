@@ -39,6 +39,7 @@ from pyspark.sql import SparkSession
 from fileverification_spark import config as CFG
 from fileverification_spark import lifecycle as L
 from fileverification_spark.operators import verify as V
+from fileverification_spark.plans.explain import codegen_counters
 from fileverification_spark.sources import pages as P
 
 SUCCESS = 0
@@ -108,6 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         return ERROR
 
     spark = _session()
+    codegen_before = codegen_counters(spark)["compiles"]
     live = P.pages_with_derived(spark, sf_dir)
 
     if point is not None:
@@ -137,7 +139,14 @@ def main(argv: list[str] | None = None) -> int:
     print(
         "VERIFY-RESULT "
         + json.dumps(
-            {"run_id": run_id, "counts": res_counts, "elapsed_sec": round(elapsed, 2)}
+            {
+                "run_id": run_id,
+                "counts": res_counts,
+                "elapsed_sec": round(elapsed, 2),
+                # generated-code cache misses during this run
+                "codegen_compiles": codegen_counters(spark)["compiles"]
+                - codegen_before,
+            }
         )
     )
     if strict and (res_counts.get("FAIL", 0) or res_counts.get("MISSING", 0)):

@@ -219,6 +219,17 @@ def test_connected_components_chain_converges(spark):
     assert set(got.values()) == {"h00"} and len(got) == n + 1
 
 
+def test_connected_components_fails_loudly_unconverged(spark):
+    # a 9-edge chain needs 9 label-changing sweeps; with fewer allowed
+    # the loop must raise, not hand back half-propagated labels
+    edges = spark.createDataFrame(
+        [(f"h{i:02d}", f"h{i + 1:02d}", 1) for i in range(9)],
+        "src string, dst string, w long",
+    )
+    with pytest.raises(RuntimeError, match="not converged"):
+        GR.connected_components(edges, max_iters=4).collect()
+
+
 def test_pagerank_resumable_bit_identical(spark, hand_edges, tmp_path):
     want = {
         r["node"]: r["rank"]

@@ -130,6 +130,27 @@ def test_hyperball_singleton_est_is_linear_counting(spark):
     assert 1.0 < GR._HB_LC[GR.HB_M - 2] < 1.1
 
 
+def test_hyperball_lc_table_rounds_half_up():
+    # every entry is m * ln(m / V) rounded HALF_UP at 4 decimals, with
+    # the logarithm taken at 40 significant digits: the table carries the
+    # rounding canon's values, not half-even ones from float round()
+    from decimal import Decimal, ROUND_HALF_UP, localcontext
+
+    m = GR.HB_M
+    with localcontext() as ctx:
+        ctx.prec = 40
+        want = tuple(
+            float(
+                (Decimal(m) * (Decimal(m) / Decimal(v)).ln()).quantize(
+                    Decimal("0.0001"), rounding=ROUND_HALF_UP
+                )
+            )
+            for v in range(1, m)
+        )
+    assert GR._HB_LC == want
+    assert (GR._HB_LC[0], GR._HB_LC[-1]) == (266.1685, 1.0079)
+
+
 def test_harmonic_centrality_matches_exact_replay(spark):
     pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("e", "a")]
     t_max = 3
