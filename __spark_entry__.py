@@ -1,13 +1,17 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  — flagship verify_tree run at sf0.001.
-queries()     — one entry per implemented operator (SURVEY.md §2).
-oracle_sql()  — DuckDB-dialect equivalents over the same parquet views.
+registry()    — every query as a Query(name, build, oracle) record, in
+                one ordered table (REGISTRY); oracle() returns the
+                DuckDB-dialect SQL over the same parquet views.
+queries()     — the driver window: the first WINDOW = 50 records.
+oracle_sql()  — the window's oracle SQL, keyed like queries().
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -918,10 +922,6 @@ def _q_c4_clean(spark: SparkSession, sf: str) -> DataFrame:
     return CUR.c4_clean(_c4_planted(spark, sf))
 
 
-def _sql_c4_clean() -> str:
-    return CUR.sql_c4_clean(_SQL_C4_PLANTED)
-
-
 def _q_retention(spark: SparkSession, sf: str) -> DataFrame:
     """Cohort retention triangle (operators/funnel.py): signup-day
     cohorts x activity-day offsets, day-granular distinct."""
@@ -1161,25 +1161,18 @@ def _q_extract_links(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_extract_links() -> str:
-    return (
-        f"SELECT doc_id, unnest({HT.sql_extract_links('html')}) AS link"
-        f" FROM {_SQL_LINK_PLANTED}"
-    )
-
-
 def _q_host_graph(spark: SparkSession, sf: str) -> DataFrame:
     return GR.host_edges(_link_planted(spark, sf))
 
 
-def _sql_host_edges(planted_rel: str) -> str:
+def _sql_host_edges() -> str:
     """Bare SELECT (no WITH — contract helper rule) rebuilding
     graph.host_edges over the planted corpus (single direct-host
     regexp pass, mirroring HOST_LINK_RE)."""
     return f"""SELECT src, dst, CAST(count(*) AS BIGINT) AS w
 FROM (SELECT {GR.sql_host_of('url')} AS src,
              unnest(regexp_extract_all(html, '{GR.HOST_LINK_RE}', 1)) AS dst
-      FROM {planted_rel}) raw
+      FROM {_SQL_LINK_PLANTED}) raw
 WHERE src != dst
 GROUP BY 1, 2"""
 
@@ -1323,23 +1316,6 @@ def _q_cell_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_cell_embeddings() -> str:
-    return (
-        _with()
-        + """
-SELECT cell, dim, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(CAST(val AS DOUBLE), 6) AS DECIMAL(24,6)))
-            AS VARCHAR) AS s
-FROM (
-  SELECT p.cell,
-         CAST(unnest(generate_series(0, len(e.embedding) - 1)) AS INT)
-           AS dim,
-         unnest(e.embedding) AS val
-  FROM pages p JOIN embeddings e ON p.doc_id = e.vec_id)
-GROUP BY cell, dim"""
-    )
-
-
 def _q_length_hist(spark: SparkSession, sf: str) -> DataFrame:
     # log2-bucketed doc-length histogram (corpus shape diagnostic):
     # bucket = bit length of n_chars — exact integers, no log2 floats
@@ -1349,12 +1325,6 @@ def _q_length_hist(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy(b.alias("log2_bucket"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     )
-
-
-def _sql_length_hist() -> str:
-    return """SELECT CAST(length(bin(n_chars)) AS BIGINT) AS log2_bucket,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM documents GROUP BY 1"""
 
 
 def _q_authority_pages(spark: SparkSession, sf: str) -> DataFrame:
@@ -1375,7 +1345,7 @@ def _q_authority_pages(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_authority_pages() -> str:
-    parts = [f"edges AS ({_sql_host_edges(_SQL_LINK_PLANTED)})"]
+    parts = [f"edges AS ({_sql_host_edges()})"]
     parts += GR.sql_pagerank_parts("edges", iters=_PAGERANK_ITERS)
     return (
         "WITH "
@@ -1576,10 +1546,6 @@ def _q_host_components(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_host_components() -> str:
-    return GR.sql_connected_components(_sql_host_edges(_SQL_LINK_PLANTED))
-
-
 def _q_surt_keys(spark: SparkSession, sf: str) -> DataFrame:
     # SURT over the messy planted corpus: canonicalize first (the CDX
     # pipeline order), so case/port/tracking-param noise collapses and
@@ -1587,13 +1553,6 @@ def _q_surt_keys(spark: SparkSession, sf: str) -> DataFrame:
     return _url_planted(spark, sf).select(
         "doc_id",
         U.surt_key(U.url_canonicalize(F.col("url"))).alias("surt"),
-    )
-
-
-def _sql_surt_keys() -> str:
-    return (
-        f"SELECT doc_id, {U.sql_surt_key('canonical_url')} AS surt"
-        f" FROM ({U.sql_canonical_select(_SQL_URL_PLANTED)}) c"
     )
 
 
@@ -1701,34 +1660,16 @@ def _q_host_triangles(spark: SparkSession, sf: str) -> DataFrame:
     return GR.host_triangles(GR.host_edges(_link_planted(spark, sf)))
 
 
-def _sql_host_triangles() -> str:
-    return GR.sql_host_triangles(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})"
-    )
-
-
 def _q_host_clustering(spark: SparkSession, sf: str) -> DataFrame:
     """Exact-integer local clustering coefficients over the planted
     host graph (triangles x degrees, milli-scale truncating div)."""
     return GR.host_clustering(GR.host_edges(_link_planted(spark, sf)))
 
 
-def _sql_host_clustering() -> str:
-    return GR.sql_host_clustering(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})"
-    )
-
-
 def _q_mirror_hosts(spark: SparkSession, sf: str) -> DataFrame:
     """Mirror-host candidates (operators/graph.py): capped outlink-set
     overlap with exact-integer Jaccard."""
     return GR.mirror_hosts(GR.host_edges(_link_planted(spark, sf)))
-
-
-def _sql_mirror_hosts() -> str:
-    return GR.sql_mirror_hosts(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})"
-    )
 
 
 #: seed-whitelist rule for trustrank/bfs: hosts whose md5 hex digest
@@ -1768,7 +1709,7 @@ def _q_trustrank_hosts(spark: SparkSession, sf: str) -> DataFrame:
 
 def _sql_trustrank_hosts() -> str:
     parts = [
-        f"edges AS ({_sql_host_edges(_SQL_LINK_PLANTED)})",
+        f"edges AS ({_sql_host_edges()})",
         f"seeds AS ({_sql_trust_seeds()})",
     ]
     parts += GR.sql_trustrank_parts("edges", "seeds", iters=_PAGERANK_ITERS)
@@ -1789,28 +1730,12 @@ def _q_bfs_depth(spark: SparkSession, sf: str) -> DataFrame:
     return GR.bfs_depth(edges, _trust_seeds(spark, sf), max_depth=_BFS_DEPTH)
 
 
-def _sql_bfs_depth() -> str:
-    return GR.sql_bfs_depth(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})",
-        f"({_sql_trust_seeds()})",
-        max_depth=_BFS_DEPTH,
-    )
-
-
 def _q_bowtie(spark: SparkSession, sf: str) -> DataFrame:
     """Broder bow-tie map (operators/graph.py): SCC/IN/OUT/OTHER
     regions around the md5-rule seed set on the planted link graph."""
     edges = GR.host_edges(_link_planted(spark, sf))
     return GR.bowtie_regions(
         edges, _trust_seeds(spark, sf), max_depth=_BFS_DEPTH
-    )
-
-
-def _sql_bowtie() -> str:
-    return GR.sql_bowtie_regions(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})",
-        f"({_sql_trust_seeds()})",
-        max_depth=_BFS_DEPTH,
     )
 
 
@@ -1825,24 +1750,10 @@ def _q_kcore_hosts(spark: SparkSession, sf: str) -> DataFrame:
     return GR.kcore(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
 
 
-def _sql_kcore_hosts() -> str:
-    return GR.sql_kcore(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})",
-        k=_KCORE_K,
-        rounds=_KCORE_ROUNDS,
-    )
-
-
 def _q_degree_mixing(spark: SparkSession, sf: str) -> DataFrame:
     """Newman degree-assortativity sufficient statistics
     (operators/graph.py) as one exact-BIGINT row."""
     return GR.degree_mixing(GR.host_edges(_link_planted(spark, sf)))
-
-
-def _sql_degree_mixing() -> str:
-    return GR.sql_degree_mixing(
-        f"({_sql_host_edges(_SQL_LINK_PLANTED)})"
-    )
 
 
 def _captures_planted(spark: SparkSession, sf: str) -> DataFrame:
@@ -1894,26 +1805,10 @@ def _q_capture_churn(spark: SparkSession, sf: str) -> DataFrame:
     return CAP.capture_churn(_captures_planted(spark, sf))
 
 
-def _sql_capture_churn() -> str:
-    return (
-        _with(f"caps AS (SELECT * FROM {_SQL_CAPTURES_PLANTED} c)")
-        + "\n"
-        + CAP.sql_capture_churn("caps")
-    )
-
-
 def _q_recrawl_priority(spark: SparkSession, sf: str) -> DataFrame:
     """Adaptive recrawl bands (operators/captures.py): exact milli
     change rate + hot/warm/cold tiers."""
     return CAP.recrawl_priority(_captures_planted(spark, sf))
-
-
-def _sql_recrawl_priority() -> str:
-    return (
-        _with(f"caps AS (SELECT * FROM {_SQL_CAPTURES_PLANTED} c)")
-        + "\n"
-        + CAP.sql_recrawl_priority("caps")
-    )
 
 
 def _q_moran_tiles(spark: SparkSession, sf: str) -> DataFrame:
@@ -1978,12 +1873,6 @@ def _q_zorder_layout(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_zorder_layout() -> str:
-    return _with() + "\n" + S.sql_zorder_layout_stats(
-        level=_ZLEVEL, prefix_level=4
-    )
-
-
 def _q_zorder_bbox(spark: SparkSession, sf: str) -> DataFrame:
     """bbox_query's twin on the Morton-SORTED layout: driver-side range
     decomposition -> OR-of-BETWEEN on the layout key -> exact refilter.
@@ -2025,20 +1914,12 @@ def _q_coverage_gaps(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_coverage_gaps() -> str:
-    return _with() + "\n" + S.sql_coverage_gaps(*_BBOX, res=_GAP_RES)
-
-
 def _q_rendezvous(spark: SparkSession, sf: str) -> DataFrame:
     """Rendezvous (HRW) shard per URL (operators/graph.py) — the
     resize-stable frontier sharding."""
     return GR.rendezvous_shards(
         P.pages_with_derived(spark, sf).select("url"), n_shards=8
     )
-
-
-def _sql_rendezvous() -> str:
-    return _with() + "\n" + GR.sql_rendezvous_shards("pages", n_shards=8)
 
 
 _AFF_RES = 3  # lang-region affinity resolution (8 x 16 global cells)
@@ -2050,28 +1931,16 @@ def _q_tile_bursts(spark: SparkSession, sf: str) -> DataFrame:
     return S.tile_bursts(P.pages_with_derived(spark, sf), z=_TILE_Z)
 
 
-def _sql_tile_bursts() -> str:
-    return _with() + "\n" + S.sql_tile_bursts(_TILE_Z)
-
-
 def _q_tile_trend(spark: SparkSession, sf: str) -> DataFrame:
     """Per-tile daily-count growth trend (operators/spatial.py): exact
     integer OLS sufficient stats, rebased epoch days."""
     return S.tile_trend(P.pages_with_derived(spark, sf), z=_TILE_Z)
 
 
-def _sql_tile_trend() -> str:
-    return _with() + "\n" + S.sql_tile_trend(_TILE_Z)
-
-
 def _q_lang_affinity(spark: SparkSession, sf: str) -> DataFrame:
     """Language-region PMI sufficient stats (operators/spatial.py):
     joint + marginal + total counts, all BIGINT, PMI downstream."""
     return S.lang_cell_affinity(P.pages_with_derived(spark, sf), res=_AFF_RES)
-
-
-def _sql_lang_affinity() -> str:
-    return _with() + "\n" + S.sql_lang_cell_affinity(_AFF_RES)
 
 
 _DBSCAN_EPS, _DBSCAN_MINPTS = 6.0, 4  # mixed-role mix on the fixtures
@@ -2111,18 +1980,10 @@ def _q_ripley(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_ripley() -> str:
-    return _with() + "\n" + S.sql_ripley_pair_counts(_RIPLEY_RADII)
-
-
 def _q_cell_extent(spark: SparkSession, sf: str) -> DataFrame:
     """Per-cell bbox + mergeable centroid state (operators/spatial.py) —
     the tile-metadata rollup."""
     return S.cell_extent(P.pages_with_derived(spark, sf), res=4)
-
-
-def _sql_cell_extent() -> str:
-    return _with() + "\n" + S.sql_cell_extent(4)
 
 
 def _q_extent_rollup(spark: SparkSession, sf: str) -> DataFrame:
@@ -2132,10 +1993,6 @@ def _q_extent_rollup(spark: SparkSession, sf: str) -> DataFrame:
     return S.cell_extent_rollup(
         P.pages_with_derived(spark, sf), res=4, parent_res=2
     )
-
-
-def _sql_extent_rollup() -> str:
-    return _with() + "\n" + S.sql_cell_extent(2)
 
 
 _FETCH_BUDGET = 1000  # global per-cycle fetch budget for apportionment
@@ -2211,7 +2068,7 @@ def _q_hits_hosts(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_hits_hosts() -> str:
-    parts = [f"edges AS ({_sql_host_edges(_SQL_LINK_PLANTED)})"]
+    parts = [f"edges AS ({_sql_host_edges()})"]
     parts += GR.sql_hits_parts("edges", iters=3)
     return (
         "WITH "
@@ -2221,7 +2078,7 @@ def _sql_hits_hosts() -> str:
 
 
 def _sql_pagerank_hosts() -> str:
-    parts = [f"edges AS ({_sql_host_edges(_SQL_LINK_PLANTED)})"]
+    parts = [f"edges AS ({_sql_host_edges()})"]
     parts += GR.sql_pagerank_parts("edges", iters=_PAGERANK_ITERS)
     return (
         "WITH "
@@ -2541,18 +2398,6 @@ def _q_dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_modularity() -> str:
-    # labels_rel is the full standalone LPA oracle nested as a derived
-    # table (DuckDB scopes subquery CTEs; the q-prefixed names in
-    # sql_modularity cannot collide with lpa's e0/und/edges/l* chain)
-    return GR.sql_modularity(
-        _sql_host_edges(_SQL_LINK_PLANTED),
-        GR.sql_lpa_communities(
-            _sql_host_edges(_SQL_LINK_PLANTED), rounds=_LPA_ROUNDS
-        ),
-    )
-
-
 def _sql_dsir_weights() -> str:
     # the inner oracle is its own WITH — merge its CTE list into the
     # pages CTE chain (the _sql_dbscan composition surgery)
@@ -2564,266 +2409,6 @@ def _sql_dsir_weights() -> str:
         raise ValueError("sql_dsir_weights no longer starts with WITH")
     return _with() + ",\n" + inner[len("WITH ") :]
 
-
-# The driver executes at most ~50 contract queries per round (r01 ran
-# 47/47, r02 ran exactly 50/65 — VERDICT r02 "What's wrong" #1). The
-# contract is therefore capped at 50 entries, ordered so that queries
-# with the LEAST driver evidence run first. Round-5 rotation (VERDICT r4
-# "Next round" #1): the r4 window (driver-green in CORRECTNESS_r04,
-# 50/50) is demoted, and the window is filled with the 43 queries that
-# have NEVER been driver-executed (the whole r4 operator surface: graph
-# centrality/structure, spatial statistics, curation/readability,
-# crawl scheduling, interop twins), plus 5 re-audit slots for queries
-# whose newest driver evidence is r01/r02 (3+ rounds stale), plus the
-# two standing canaries. Demoted queries stay under the same strict
-# driver-mirror canon every CI run via tests/test_demoted_contract.py
-# at BOTH sf0.001 and the driver's own sf0.01.
-_CONTRACT: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {
-    # -- never driver-run: r4 geospatial-variant backlog --
-    "knn_geodesic": _q_knn_geodesic,
-    "raster_pyramid": _q_raster_pyramid,
-    "tile_counts": _q_tile_counts,
-    # -- never driver-run: r4 curation / retrieval / text additions --
-    "domain_quantiles": _q_domain_quantiles,
-    "html_meta": _q_html_meta,
-    "mime_kinds": _q_mime_kinds,
-    "readability": _q_readability,
-    "wet_export": _q_wet_export,
-    "c4_clean": _q_c4_clean,
-    "unigram_surprisal": _q_surprisal,
-    "capture_churn": _q_capture_churn,
-    # -- never driver-run: r4 web-graph centrality / structure --
-    "cocite_hosts": _q_cocite_hosts,
-    "hits_hosts": _q_hits_hosts,
-    "trustrank_hosts": _q_trustrank_hosts,
-    "kcore_hosts": _q_kcore_hosts,
-    "host_triangles": _q_host_triangles,
-    "mirror_hosts": _q_mirror_hosts,
-    "degree_mixing": _q_degree_mixing,
-    # -- never driver-run: r4 crawl scheduling / event analytics --
-    "fetch_schedule": _q_fetch_schedule,
-    "rendezvous_shards": _q_rendezvous,
-    "funnel": _q_funnel,
-    "retention": _q_retention,
-    # -- never driver-run: r4 spatial statistics / layout --
-    "getis_ord": _q_getis_ord,
-    "ripley_k": _q_ripley,
-    "dbscan": _q_dbscan,
-    "focal_smooth": _q_focal_smooth,
-    "coverage_gaps": _q_coverage_gaps,
-    "tile_bursts": _q_tile_bursts,
-    "lang_affinity": _q_lang_affinity,
-    "cell_extent": _q_cell_extent,
-    "zorder_bbox": _q_zorder_bbox,
-    # -- new in r5 (never driver-run) --
-    "url_quality": _q_url_quality,
-    "crawl_traps": _q_crawl_traps,
-    "semantic_dedup": _q_semantic_dedup,
-    "winnow_pairs": _q_winnow_pairs,
-    "phrase_search": _q_phrase_search,
-    "lang_temperature": _q_lang_temperature,
-    "canonical_resolve": _q_canonical_resolve,
-    # -- late r5 (never driver-run): each replaces a window query whose
-    #    operator core a remaining window sibling still exercises --
-    "hybrid_search": _q_hybrid_search,
-    "kn_bigrams": _q_kn_bigrams,
-    "cms_tokens": _q_cms_tokens,
-    "hll_cells": _q_hll_cells,
-    "adamic_adar": _q_adamic_adar,
-    "event_transitions": _q_event_transitions,
-    "cdc_dedup": _q_cdc_dedup,
-    "tile_classes": _q_tile_classes,
-    "bowtie_regions": _q_bowtie,
-    # -- new in r5: Bloom frontier membership (took geohash_counts'
-    #    slot — tile_counts exercises the same fixed-grid bucket-count
-    #    core) --
-    "bloom_frontier": _q_bloom_frontier,
-    # -- canaries (driver-green r01-r04; regression sentinels) --
-    "pages_derive": _q_pages_derive,
-    "verify_report": _q_verify_report,
-}
-
-
-# Queries outside the driver window. Every entry here is driver-green in
-# at least one of CORRECTNESS_r01-r04 (the r5 rotation demotes the whole
-# driver-green-r04 window) or is a twin/variant subsumed by a promoted
-# query. All of them run through tools/check_oracle's strict canon each
-# CI run at sf0.001 AND the driver's sf0.01
-# (tests/test_demoted_contract.py), so demotion never weakens
-# correctness evidence — it only frees driver-window slots.
-_DEMOTED: "dict[str, Callable[[SparkSession, str], DataFrame]]" = {
-    # r5 late additions (winnow_pairs/phrase_search/lang_temperature/
-    # canonical_resolve) claimed four window slots: the two re-audit
-    # entries (driver evidence r01/r02 — more than the zero the new
-    # operators have) and two never-run twins whose machinery is
-    # exercised by their promoted siblings (politeness_schedule by
-    # fetch_schedule, tile_trend by tile_bursts). All four stay under
-    # the strict demoted-gate canon at both scale factors.
-    "events_dedup": _q_events_dedup,
-    "cell_digests_mergeable": _q_cell_digests_mergeable,
-    "politeness_schedule": _q_politeness_schedule,
-    "tile_trend": _q_tile_trend,
-    # Never-run overflow twins: the nine late-r5 operators were promoted
-    # into the window; these nine ceded their slots because a window
-    # sibling still exercises the same operator core (raster_smooth by
-    # focal_smooth's kernel, shingle_dups by winnow_pairs' k-gram
-    # fingerprints, recrawl_priority by capture_churn, bfs_depth by
-    # bowtie_regions' bidirectional relaxation, host_clustering by
-    # host_triangles, fetch_budget by rendezvous_shards +
-    # lang_temperature's Hamilton arithmetic, moran_tiles by getis_ord's
-    # W-matrix, extent_rollup by cell_extent, zorder_layout by
-    # zorder_bbox's Morton machinery, bigram_surprisal by kn_bigrams).
-    # All stay under the strict demoted-gate canon at both scale factors.
-    "raster_smooth": _q_raster_smooth,
-    "shingle_dups": _q_shingle_dups,
-    "recrawl_priority": _q_recrawl_priority,
-    "bfs_depth": _q_bfs_depth,
-    "host_clustering": _q_host_clustering,
-    "fetch_budget": _q_fetch_budget,
-    "moran_tiles": _q_moran_tiles,
-    "extent_rollup": _q_extent_rollup,
-    "zorder_layout": _q_zorder_layout,
-    "bigram_surprisal": _q_bigram_surprisal,
-    "geohash_counts": _q_geohash_counts,
-    # Post-window-freeze r5 additions: the window was already spent on
-    # the 50 least-evidenced queries when these landed, so they enter
-    # under the strict demoted-gate canon (both scale factors) from day
-    # one — the same evidence every demoted query carries.
-    "hilbert_layout": _q_hilbert_layout,
-    "skew_report": _q_skew_report,
-    "lpa_communities": _q_lpa_communities,
-    "hyperball": _q_hyperball,
-    "harmonic_centrality": _q_harmonic_centrality,
-    "distance_distribution": _q_distance_distribution,
-    "modularity": _q_modularity,
-    "dsir_weights": _q_dsir_weights,
-    # r5: re-audit slots ceded to the new url_quality/crawl_traps/
-    # semantic_dedup window entries (newest driver evidence r02)
-    "knn_adaptive": _q_knn_adaptive,
-    "simhash_buckets": _q_simhash_buckets,
-    "uncompact_roundtrip": _q_uncompact_roundtrip,
-    "sample_hash": _q_sample_hash,
-    "sample_stratified": _q_sample_stratified,
-    "mixture_weights": _q_mixture_weights,
-    "domain_stats": _q_domain_stats,
-    "repetition_stats": _q_repetition_stats,
-    "decontaminate": _q_decontaminate,
-    "vocab_topk": _q_vocab_topk,
-    "dup_clusters": _q_dup_clusters,
-    "pii_scrub": _q_pii_scrub,
-    "paragraph_dedup": _q_paragraph_dedup,
-    "url_families": _q_url_families,
-    "pack_chunks": _q_pack_chunks,
-    "trending_terms": _q_trending_terms,
-    "length_hist": _q_length_hist,
-    "tfidf_terms": _q_tfidf,
-    "bm25_topk": _q_bm25,
-    "inverted_index": _q_inverted_index,
-    "collocations": _q_collocations,
-    "html_text": _q_html_text,
-    "boilerplate": _q_boilerplate,
-    "clean_pages": _q_clean_pages,
-    "extract_links": _q_extract_links,
-    "host_graph": _q_host_graph,
-    "pagerank_hosts": _q_pagerank_hosts,
-    "host_components": _q_host_components,
-    "host_degrees": _q_host_degrees,
-    "mutual_links": _q_mutual_links,
-    "anchor_terms": _q_anchor_terms,
-    "anchor_index": _q_anchor_index,
-    "authority_pages": _q_authority_pages,
-    "crawl_frontier": _q_crawl_frontier,
-    "frontier_shards": _q_frontier_shards,
-    "robots_rules": _q_robots_rules,
-    "robots_filter": _q_robots_filter,
-    "sitemap_urls": _q_sitemap_urls,
-    "surt_keys": _q_surt_keys,
-    "cdx_records": _q_cdx_records,
-    "latest_capture": _q_latest_capture,
-    "warc_export": _q_warc_export,
-    "domain_subtree": _q_domain_subtree,
-    "hotspots_distributed": _q_hotspots_distributed,
-    "polygon_stats": _q_polygon_stats,
-    "track_length": _q_track_length,
-    "track_cells": _q_track_cells,
-    "poly_join": _q_poly_join,
-    "interval_join": _q_interval_join,
-    "kmv_cells": _q_kmv_cells,
-    "cell_embeddings": _q_cell_embeddings,
-    "multimodal_features": _q_multimodal,
-    "multimodal_frames": _q_multimodal_frames,
-    "exclusion_filter": _q_exclusion_filter,
-    "geofence_alerts": _q_geofence_alerts,
-    "windowed_counts": _q_windowed_counts,
-    "sessionize": _q_sessionize,
-    "asof_attribution": _q_asof_attribution,
-    "events_enrich": _q_events_enrich,
-    "tpch_pricing": _q_tpch_pricing,
-    "orders_by_nation": _q_orders_by_nation,
-    "merkle_diff": _q_merkle_diff,
-    "incremental_verify": _q_incremental_verify,
-    "lineage": _q_lineage,
-    "ann_ivf_recall": _q_ann_ivf,
-    "verify_counts": _q_verify_counts,
-    "manifest_leaf": _q_manifest_leaf,
-    "merkle_ladder": _q_merkle_ladder,
-    "verify_keys": _q_verify_keys,
-    "report_log": _q_report_log,
-    "manifest_text_roundtrip": _q_manifest_text_roundtrip,
-    "manifest_remove_missing": _q_manifest_remove_missing,
-    "pip_pages": _q_pip_pages,
-    "knn": _q_knn,
-    "distance_join": _q_distance_join,
-    "nn_join": _q_nn_join,
-    "raster_cells": _q_raster,
-    "rasterize_polys": _q_rasterize,
-    "compact_cells": _q_compact_cells,
-    "bbox_query": _q_bbox,
-    "zonal_stats": _q_zonal_stats,
-    "top_lang_cell": _q_top_lang_cell,
-    "raster_diff": _q_raster_diff,
-    "hotspots": _q_hotspots,
-    "od_matrix": _q_od_matrix,
-    "raster_users": _q_raster_users,
-    "fence_dwells": _q_fence_dwells,
-    "doc_stats": _q_doc_stats,
-    "lang_id": _q_lang_id,
-    "fingerprint": _q_fingerprint,
-    "dedup_exact": _q_dedup_exact,
-    "curation_stats": _q_curation_stats,
-    "dedup_minhash": _q_dedup_minhash,
-    "ngram_jaccard": _q_ngram_jaccard,
-    "simhash": _q_simhash,
-    "ann_cosine_topk": _q_ann_topk,
-    "ann_quantized_topk": _q_ann_quantized_topk,
-    "emb_neardup": _q_emb_neardup,
-    "ann_lsh_recall": _q_ann_lsh,
-    "cell_digests": _q_cell_digests,
-    "cell_digests_salted": _q_cell_digests_salted,
-    "point_verify": _q_point_verify,
-    "verify_cell": _q_verify_cell,
-    "hash_only": _q_hash_only,
-    "pip_pages_sql": _q_pip_pages_sql,
-    "pip_counts": _q_pip_counts,
-    "knn_ring": _q_knn_ring,
-    "raster_zoom": _q_raster_zoom,
-    "raster_vectorize": _q_raster_vectorize,
-}
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(_CONTRACT)
-
-
-def demoted_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Twin/variant queries outside the driver window — oracle-checked by
-    tests/test_demoted_contract.py with the same strict canon."""
-    return dict(_DEMOTED)
-
-
-# ---------------------------------------------------------------------------
-# oracle_sql
-# ---------------------------------------------------------------------------
 
 def _sql_ladder() -> str:
     parts = [f"d{LEAF} AS ({M.sql_leaf_digests(LEAF)})"]
@@ -2865,41 +2450,396 @@ WHERE s.digest IS NULL OR l.digest IS NULL OR l.digest != s.digest"""
     )
 
 
-def oracle_sql() -> dict[str, str]:
-    """Oracles for the driver contract — keys match queries() exactly."""
-    full = _all_oracle_sql()
-    return {k: full[k] for k in _CONTRACT}
+# ---------------------------------------------------------------------------
+# registry — one record per query; the driver window comes first
+# ---------------------------------------------------------------------------
+
+class Query(NamedTuple):
+    """A contract query: the Spark builder and a zero-argument callable
+    returning the DuckDB oracle SQL over the same parquet views."""
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: Callable[[], str]
 
 
-def demoted_oracle_sql() -> dict[str, str]:
-    """Oracles for the demoted twin queries (pytest gate)."""
-    full = _all_oracle_sql()
-    return {k: full[k] for k in _DEMOTED}
+_STORED = f"stored AS ({V.sql_tampered_manifest()})"
+_REPORT = f"report AS ({V.sql_verify_report()})"
 
+# The driver executes the first WINDOW records. Every record, inside the
+# window or not, is held to the same oracle parity gate at sf0.001 and
+# sf0.01 (tests/test_demoted_contract.py).
+WINDOW = 50
 
-def _all_oracle_sql() -> dict[str, str]:
-    stored = f"stored AS ({V.sql_tampered_manifest()})"
-    report = f"report AS ({V.sql_verify_report()})"
-    return {
-        "pages_derive": _with()
-        + "\nSELECT doc_id, url, warc_ts, lang, text_sha256, lat, lon, cell FROM pages",
-        "verify_report": _with(stored)
+REGISTRY: tuple[Query, ...] = (
+    Query("knn_geodesic", _q_knn_geodesic,
+          lambda: _with() + "\n" + S.sql_knn_geodesic(_QPTS, _KNN_K)),
+    Query("raster_pyramid", _q_raster_pyramid,
+          lambda: _with() + "\n" + S.sql_raster_pyramid(6, 3)),
+    Query("tile_counts", _q_tile_counts, lambda: _with() + "\n" + _sql_tile_counts()),
+    Query("domain_quantiles", _q_domain_quantiles,
+          lambda: _with() + "\n" + CUR.sql_domain_quantiles()),
+    Query("html_meta", _q_html_meta, _sql_html_meta),
+    Query("mime_kinds", _q_mime_kinds, _sql_mime_kinds),
+    Query("readability", _q_readability, _sql_readability),
+    Query("wet_export", _q_wet_export, _sql_wet_export),
+    Query("c4_clean", _q_c4_clean, lambda: CUR.sql_c4_clean(_SQL_C4_PLANTED)),
+    Query("unigram_surprisal", _q_surprisal, CUR.sql_unigram_surprisal),
+    Query("capture_churn", _q_capture_churn, lambda: (
+        _with(f"caps AS (SELECT * FROM {_SQL_CAPTURES_PLANTED} c)")
         + "\n"
-        + V.sql_verify_report(),
-        "verify_counts": _with(stored, report)
-        + "\nSELECT status, count(*) AS n FROM report GROUP BY status",
-        "manifest_leaf": _with()
-        + f"\nSELECT {LEAF} AS res, cell, url AS child_key, 'sha256' AS algo,"
-        " text_sha256 AS hash FROM pages",
-        "cell_digests": _with() + "\n" + M.sql_leaf_digests(LEAF),
-        "cell_digests_salted": _with() + "\n" + M.sql_salted_digests(LEAF),
-        "cell_digests_mergeable": _with() + "\n" + M.sql_mergeable_digests(LEAF),
-        "merkle_ladder": _sql_ladder(),
-        "point_verify": _with()
+        + CAP.sql_capture_churn("caps")
+    )),
+    Query("cocite_hosts", _q_cocite_hosts,
+          lambda: GR.sql_cocitation(_sql_host_edges())),
+    Query("hits_hosts", _q_hits_hosts, _sql_hits_hosts),
+    Query("trustrank_hosts", _q_trustrank_hosts, _sql_trustrank_hosts),
+    Query("kcore_hosts", _q_kcore_hosts, lambda: GR.sql_kcore(
+        f"({_sql_host_edges()})",
+        k=_KCORE_K,
+        rounds=_KCORE_ROUNDS,
+    )),
+    Query("host_triangles", _q_host_triangles,
+          lambda: GR.sql_host_triangles(f"({_sql_host_edges()})")),
+    Query("mirror_hosts", _q_mirror_hosts,
+          lambda: GR.sql_mirror_hosts(f"({_sql_host_edges()})")),
+    Query("degree_mixing", _q_degree_mixing,
+          lambda: GR.sql_degree_mixing(f"({_sql_host_edges()})")),
+    Query("fetch_schedule", _q_fetch_schedule, _sql_fetch_schedule),
+    Query("rendezvous_shards", _q_rendezvous,
+          lambda: _with() + "\n" + GR.sql_rendezvous_shards("pages", n_shards=8)),
+    Query("funnel", _q_funnel, FN.sql_funnel),
+    Query("retention", _q_retention, FN.sql_retention),
+    Query("getis_ord", _q_getis_ord, _sql_getis_ord),
+    Query("ripley_k", _q_ripley,
+          lambda: _with() + "\n" + S.sql_ripley_pair_counts(_RIPLEY_RADII)),
+    Query("dbscan", _q_dbscan, _sql_dbscan),
+    Query("focal_smooth", _q_focal_smooth, _sql_focal_smooth),
+    Query("coverage_gaps", _q_coverage_gaps,
+          lambda: _with() + "\n" + S.sql_coverage_gaps(*_BBOX, res=_GAP_RES)),
+    Query("tile_bursts", _q_tile_bursts,
+          lambda: _with() + "\n" + S.sql_tile_bursts(_TILE_Z)),
+    Query("lang_affinity", _q_lang_affinity,
+          lambda: _with() + "\n" + S.sql_lang_cell_affinity(_AFF_RES)),
+    Query("cell_extent", _q_cell_extent, lambda: _with() + "\n" + S.sql_cell_extent(4)),
+    Query("zorder_bbox", _q_zorder_bbox, lambda: _with() + "\n" + S.sql_bbox(*_BBOX)),
+    Query("url_quality", _q_url_quality,
+          lambda: U.sql_url_quality_select(_SQL_URL_PLANTED)),
+    Query("crawl_traps", _q_crawl_traps,
+          lambda: _with() + "\n" + CUR.sql_crawl_traps()),
+    Query("semantic_dedup", _q_semantic_dedup,
+          lambda: SIM.sql_semantic_dedup(_SEMDEDUP_TAU, _SEMDEDUP_MOD)),
+    Query("winnow_pairs", _q_winnow_pairs, D.sql_winnow_pairs_query),
+    Query("phrase_search", _q_phrase_search, lambda: SRCH.sql_phrase_search(_PHRASE)),
+    Query("lang_temperature", _q_lang_temperature, SMP.sql_lang_temperature),
+    Query("canonical_resolve", _q_canonical_resolve,
+          lambda: GR.sql_canonical_resolve(_SQL_CANON_PLANTED)),
+    Query("hybrid_search", _q_hybrid_search, _sql_hybrid_search),
+    Query("kn_bigrams", _q_kn_bigrams,
+          lambda: CUR.sql_kn_bigram_stats(min_count=_KN_MIN_COUNT)),
+    Query("cms_tokens", _q_cms_tokens, SK.sql_cms_tokens),
+    Query("hll_cells", _q_hll_cells,
+          lambda: _with() + "\n" + SK.sql_hll_estimate(_RASTER_RES)),
+    Query("adamic_adar", _q_adamic_adar, lambda: GR.sql_adamic_adar(_sql_host_edges())),
+    Query("event_transitions", _q_event_transitions, FN.sql_event_transitions),
+    Query("cdc_dedup", _q_cdc_dedup, _sql_cdc_dedup),
+    Query("tile_classes", _q_tile_classes,
+          lambda: _with() + "\n" + _sql_tile_classes()),
+    Query("bowtie_regions", _q_bowtie, lambda: GR.sql_bowtie_regions(
+        f"({_sql_host_edges()})",
+        f"({_sql_trust_seeds()})",
+        max_depth=_BFS_DEPTH,
+    )),
+    Query("bloom_frontier", _q_bloom_frontier, lambda: (
+        _with(SK.sql_bloom_ctes(_SQL_BLOOM_CAND))
+        + "\n"
+        + SK.sql_bloom_probe_select()
+    )),
+    Query("pages_derive", _q_pages_derive, lambda: (
+        _with()
+        + "\nSELECT doc_id, url, warc_ts, lang, text_sha256, lat, lon, cell FROM pages"
+    )),
+    Query("verify_report", _q_verify_report,
+          lambda: _with(_STORED) + "\n" + V.sql_verify_report()),
+    # ---- end of the driver window ----
+    Query("events_dedup", _q_events_dedup,
+          lambda: "SELECT DISTINCT event_id FROM events"),
+    Query("cell_digests_mergeable", _q_cell_digests_mergeable,
+          lambda: _with() + "\n" + M.sql_mergeable_digests(LEAF)),
+    Query("politeness_schedule", _q_politeness_schedule, _sql_politeness_schedule),
+    Query("tile_trend", _q_tile_trend,
+          lambda: _with() + "\n" + S.sql_tile_trend(_TILE_Z)),
+    Query("raster_smooth", _q_raster_smooth,
+          lambda: _with() + "\n" + S.sql_raster_smooth(_RASTER_RES)),
+    Query("shingle_dups", _q_shingle_dups, D.sql_shingle_duplicates_query),
+    Query("recrawl_priority", _q_recrawl_priority, lambda: (
+        _with(f"caps AS (SELECT * FROM {_SQL_CAPTURES_PLANTED} c)")
+        + "\n"
+        + CAP.sql_recrawl_priority("caps")
+    )),
+    Query("bfs_depth", _q_bfs_depth, lambda: GR.sql_bfs_depth(
+        f"({_sql_host_edges()})",
+        f"({_sql_trust_seeds()})",
+        max_depth=_BFS_DEPTH,
+    )),
+    Query("host_clustering", _q_host_clustering,
+          lambda: GR.sql_host_clustering(f"({_sql_host_edges()})")),
+    Query("fetch_budget", _q_fetch_budget, _sql_fetch_budget),
+    Query("moran_tiles", _q_moran_tiles, _sql_moran_tiles),
+    Query("extent_rollup", _q_extent_rollup,
+          lambda: _with() + "\n" + S.sql_cell_extent(2)),
+    Query("zorder_layout", _q_zorder_layout, lambda: (
+        _with() + "\n" + S.sql_zorder_layout_stats(level=_ZLEVEL, prefix_level=4)
+    )),
+    Query("bigram_surprisal", _q_bigram_surprisal,
+          lambda: CUR.sql_bigram_surprisal(min_count=_BG_MIN_COUNT)),
+    Query("geohash_counts", _q_geohash_counts,
+          lambda: _with() + "\n" + _sql_geohash_counts()),
+    Query("hilbert_layout", _q_hilbert_layout, lambda: (
+        _with(grid.sql_hilbert_ladder())
+        + "\n"
+        + S.sql_hilbert_layout_stats()
+    )),
+    Query("skew_report", _q_skew_report, lambda: (
+        _with(DG.sql_skew_report("pages", GR.sql_host_of("url"), top=_SKEW_TOP))
+        + "\n"
+        + DG.sql_skew_report_select(target=_SKEW_TARGET)
+    )),
+    Query("lpa_communities", _q_lpa_communities,
+          lambda: GR.sql_lpa_communities(_sql_host_edges(), rounds=_LPA_ROUNDS)),
+    Query("hyperball", _q_hyperball,
+          lambda: GR.sql_hyperball(_sql_host_edges(), t_max=_HB_TMAX)),
+    Query("harmonic_centrality", _q_harmonic_centrality,
+          lambda: GR.sql_harmonic_centrality(_sql_host_edges(), t_max=_HB_TMAX)),
+    Query("distance_distribution", _q_distance_distribution,
+          lambda: GR.sql_distance_distribution(_sql_host_edges(), t_max=_HB_TMAX)),
+    # labels_rel is the full standalone LPA oracle nested as a derived
+    # table (DuckDB scopes subquery CTEs; the q-prefixed names in
+    # sql_modularity cannot collide with lpa's e0/und/edges/l* chain)
+    Query("modularity", _q_modularity, lambda: GR.sql_modularity(
+        _sql_host_edges(),
+        GR.sql_lpa_communities(_sql_host_edges(), rounds=_LPA_ROUNDS),
+    )),
+    Query("dsir_weights", _q_dsir_weights, _sql_dsir_weights),
+    Query("knn_adaptive", _q_knn_adaptive,
+          lambda: _with() + "\n" + S.sql_knn(_QPTS, _KNN_K)),
+    Query("simhash_buckets", _q_simhash_buckets, lambda: (
+        f"WITH sh AS ({D.sql_simhash_docs_query()})\n"
+        "SELECT simhash, count(*) AS n_docs, min(doc_id) AS keeper_id "
+        "FROM sh GROUP BY simhash HAVING count(*) > 1"
+    )),
+    Query("uncompact_roundtrip", _q_uncompact_roundtrip, lambda: (
+        f"SELECT DISTINCT cell FROM ({S.sql_rasterize(_POLYS, res=5)}) AS _m"
+    )),
+    Query("sample_hash", _q_sample_hash, lambda: SMP.sql_hash_sample(
+        "CAST(doc_id AS VARCHAR)", _SAMPLE_FRACTION, "documents"
+    )),
+    Query("sample_stratified", _q_sample_stratified, lambda: SMP.sql_stratified_sample(
+        "lang", _STRATA_N, "CAST(doc_id AS VARCHAR)", "documents",
+        cols="doc_id, text, lang, source, n_chars",
+    )),
+    Query("mixture_weights", _q_mixture_weights,
+          lambda: SMP.sql_mixture_weights("source", _MIX_TARGET, "documents")),
+    Query("domain_stats", _q_domain_stats,
+          lambda: _with() + "\n" + CUR.sql_domain_stats()),
+    Query("repetition_stats", _q_repetition_stats, REP.sql_repetition_stats),
+    Query("decontaminate", _q_decontaminate, lambda: REP.sql_decontaminate(
+        f"(SELECT * FROM documents WHERE doc_id % {REP.BENCH_MOD} != 0)",
+        f"(SELECT * FROM documents WHERE doc_id % {REP.BENCH_MOD} = 0)",
+    )),
+    Query("vocab_topk", _q_vocab_topk, CUR.sql_vocab_topk),
+    Query("dup_clusters", _q_dup_clusters, D.sql_duplicate_clusters_query),
+    Query("pii_scrub", _q_pii_scrub,
+          lambda: SCRUB.sql_pii_scrub_query(_SQL_PII_PLANTED)),
+    Query("paragraph_dedup", _q_paragraph_dedup,
+          lambda: D.sql_paragraph_dedup_query(_SQL_PARA_DOCS)),
+    Query("url_families", _q_url_families, lambda: (
+        f"""
+SELECT canonical_url, MIN(doc_id) AS keeper_id,
+       COUNT(*) AS n_variants
+FROM ({U.sql_canonical_select(_SQL_URL_PLANTED)})
+GROUP BY canonical_url"""
+    )),
+    Query("pack_chunks", _q_pack_chunks, lambda: PK.sql_pack_offsets("documents", 512)),
+    Query("trending_terms", _q_trending_terms,
+          lambda: _with() + "\n" + SW.sql_trending_terms("pages", 5)),
+    Query("length_hist", _q_length_hist, lambda: (
+        """SELECT CAST(length(bin(n_chars)) AS BIGINT) AS log2_bucket,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM documents GROUP BY 1"""
+    )),
+    Query("tfidf_terms", _q_tfidf, lambda: CUR.sql_tfidf_top_terms("documents", 3)),
+    Query("bm25_topk", _q_bm25,
+          lambda: SRCH.sql_bm25_search("documents", _BM25_QUERY, 20)),
+    Query("inverted_index", _q_inverted_index,
+          lambda: SRCH.sql_inverted_index(min_df=2, postings_cap=8)),
+    Query("collocations", _q_collocations,
+          lambda: CUR.sql_collocations_topk("documents", 20, 5)),
+    Query("html_text", _q_html_text, _sql_html_text),
+    Query("boilerplate", _q_boilerplate,
+          lambda: CUR.sql_boilerplate_paras(_SQL_BP_PLANTED, 50)),
+    Query("clean_pages", _q_clean_pages,
+          lambda: CUR.sql_remove_boilerplate(_SQL_BP_PLANTED, 50)),
+    Query("extract_links", _q_extract_links, lambda: (
+        f"SELECT doc_id, unnest({HT.sql_extract_links('html')}) AS link"
+        f" FROM {_SQL_LINK_PLANTED}"
+    )),
+    Query("host_graph", _q_host_graph, _sql_host_edges),
+    Query("pagerank_hosts", _q_pagerank_hosts, _sql_pagerank_hosts),
+    Query("host_components", _q_host_components,
+          lambda: GR.sql_connected_components(_sql_host_edges())),
+    Query("host_degrees", _q_host_degrees,
+          lambda: GR.sql_host_degrees(_sql_host_edges())),
+    Query("mutual_links", _q_mutual_links,
+          lambda: GR.sql_mutual_links(_sql_host_edges())),
+    Query("anchor_terms", _q_anchor_terms,
+          lambda: GR.sql_anchor_terms(_SQL_LINK_PLANTED)),
+    Query("anchor_index", _q_anchor_index,
+          lambda: GR.sql_anchor_index(_SQL_LINK_PLANTED)),
+    Query("authority_pages", _q_authority_pages, _sql_authority_pages),
+    Query("crawl_frontier", _q_crawl_frontier,
+          lambda: GR.sql_crawl_frontier(_SQL_LINK_PLANTED)),
+    Query("frontier_shards", _q_frontier_shards, _sql_frontier_shards),
+    Query("robots_rules", _q_robots_rules, _sql_robots_rules),
+    Query("robots_filter", _q_robots_filter,
+          lambda: _with() + "\n" + _sql_robots_filter()),
+    Query("sitemap_urls", _q_sitemap_urls, _sql_sitemap_urls),
+    Query("surt_keys", _q_surt_keys, lambda: (
+        f"SELECT doc_id, {U.sql_surt_key('canonical_url')} AS surt"
+        f" FROM ({U.sql_canonical_select(_SQL_URL_PLANTED)}) c"
+    )),
+    Query("cdx_records", _q_cdx_records, _sql_cdx_records),
+    Query("latest_capture", _q_latest_capture, _sql_latest_capture),
+    Query("warc_export", _q_warc_export, _sql_warc_export),
+    Query("domain_subtree", _q_domain_subtree, _sql_domain_subtree),
+    # identical output contract to hotspots — the scale path must
+    # reproduce the driver-side union-find's components exactly
+    Query("hotspots_distributed", _q_hotspots_distributed, lambda: (
+        "WITH RECURSIVE "
+        + P.pages_cte(LEAF)
+        + ",\n"
+        + S.sql_hotspots(_HOTSPOT_RES, _HOTSPOT_MIN)
+    )),
+    Query("polygon_stats", _q_polygon_stats, lambda: S.sql_polygon_stats(
+        f"(VALUES {S.sql_polygon_values(_POLYS)}) AS p(poly_id, wkt)"
+    )),
+    Query("track_length", _q_track_length, TJ.sql_track_length),
+    Query("track_cells", _q_track_cells, lambda: TJ.sql_track_cells(_TRACK_RES)),
+    Query("poly_join", _q_poly_join, lambda: S.sql_poly_intersection_join(
+        S.default_polygons(8), _POLYS_B, _POLY_JOIN_RES
+    )),
+    Query("interval_join", _q_interval_join, lambda: (
+        f"""
+WITH sess AS ({SW.sql_sessionize()})
+SELECT e.event_id, e.user_id, s.session_id
+FROM events e JOIN sess s
+  ON e.user_id = s.user_id
+ AND epoch_us(e.ts) BETWEEN s.session_start AND s.session_end"""
+    )),
+    Query("kmv_cells", _q_kmv_cells,
+          lambda: _with() + "\n" + SK.sql_kmv_estimate(_RASTER_RES)),
+    Query("cell_embeddings", _q_cell_embeddings, lambda: (
+        _with()
         + """
-SELECT url, text_sha256 AS computed_hash, TRUE AS match
-FROM pages WHERE doc_id = 1""",
-        "verify_keys": _with(
+SELECT cell, dim, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(CAST(val AS DOUBLE), 6) AS DECIMAL(24,6)))
+            AS VARCHAR) AS s
+FROM (
+  SELECT p.cell,
+         CAST(unnest(generate_series(0, len(e.embedding) - 1)) AS INT)
+           AS dim,
+         unnest(e.embedding) AS val
+  FROM pages p JOIN embeddings e ON p.doc_id = e.vec_id)
+GROUP BY cell, dim"""
+    )),
+    Query("multimodal_features", _q_multimodal,
+          lambda: MM.sql_features_query(P.pages_cte(LEAF))),
+    Query("multimodal_frames", _q_multimodal_frames,
+          lambda: MM.sql_frames_query(P.pages_cte(LEAF))),
+    Query("exclusion_filter", _q_exclusion_filter, lambda: (
+        _with()
+        + f"\nSELECT doc_id, url FROM pages WHERE NOT {CFG.sql_exclusion_predicate(_EXCL)}"
+    )),
+    Query("geofence_alerts", _q_geofence_alerts,
+          lambda: SG.sql_geofence_alerts(_POLYS)),
+    Query("windowed_counts", _q_windowed_counts, SW.sql_windowed_counts),
+    Query("sessionize", _q_sessionize, SW.sql_sessionize),
+    Query("asof_attribution", _q_asof_attribution, AS.sql_attribute_to_last_view),
+    Query("events_enrich", _q_events_enrich, lambda: (
+        "SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT)"
+        " AS prop_k, CAST(round(value * 100, 0) AS BIGINT) AS value_cents"
+        " FROM events"
+    )),
+    Query("tpch_pricing", _q_tpch_pricing, lambda: (
+        """
+SELECT l_returnflag, l_linestatus,
+       CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS VARCHAR) AS sum_qty,
+       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS VARCHAR)
+         AS sum_base_price,
+       CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
+           * (1 - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(28,8)))
+           AS VARCHAR)
+         AS sum_disc_price,
+       round(CAST(avg(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 6) AS avg_qty,
+       count(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+GROUP BY l_returnflag, l_linestatus"""
+    )),
+    Query("orders_by_nation", _q_orders_by_nation, lambda: (
+        """
+SELECT n_name, count(*) AS n_orders,
+       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS VARCHAR) AS total_price
+FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+GROUP BY n_name"""
+    )),
+    Query("merkle_diff", _q_merkle_diff, _sql_merkle_diff),
+    # frontier = leaf cells whose live digest differs from the digest of
+    # the stored manifest (full-outer: either-side-only cells count).
+    # Digests compare hash STRINGS, so md5-algo entries flag their cell
+    # even when content verifies OK — the frontier is conservative, and
+    # the oracle reproduces that exactly.
+    Query("incremental_verify", _q_incremental_verify, lambda: (
+        _with(
+            _STORED,
+            f"live_d AS ({M.sql_leaf_digests(LEAF)})",
+            "stored_d AS (SELECT cell, upper(sha256(string_agg("
+            "child_key || hash, '' ORDER BY child_key || hash))) AS digest "
+            "FROM stored GROUP BY cell)",
+            "chg AS (SELECT coalesce(l.cell, s.cell) AS cell "
+            "FROM live_d l FULL JOIN stored_d s ON l.cell = s.cell "
+            "WHERE l.digest IS NULL OR s.digest IS NULL OR l.digest != s.digest)",
+            _REPORT,
+        )
+        + """
+SELECT r.cell, r.child_key, r.status, r.algo, r.stored_hash, r.computed_hash
+FROM report r SEMI JOIN chg c ON r.cell = c.cell"""
+    )),
+    Query("lineage", _q_lineage, lambda: (
+        _with(_STORED, _REPORT)
+        + """
+SELECT 'r1' AS run_id, cell, count(*) AS n_rows,
+       CAST(sum(CASE WHEN status = 'OK' THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
+       CAST(sum(CASE WHEN status = 'FAIL' THEN 1 ELSE 0 END) AS BIGINT) AS n_fail,
+       CAST(sum(CASE WHEN status = 'ADDED' THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
+       CAST(sum(CASE WHEN status = 'MISSING' THEN 1 ELSE 0 END) AS BIGINT) AS n_missing
+FROM report GROUP BY cell"""
+    )),
+    Query("ann_ivf_recall", _q_ann_ivf,
+          lambda: SIM.sql_recall_certificate(_ANN_QIDS, _ANN_K)),
+    Query("verify_counts", _q_verify_counts, lambda: (
+        _with(_STORED, _REPORT)
+        + "\nSELECT status, count(*) AS n FROM report GROUP BY status"
+    )),
+    Query("manifest_leaf", _q_manifest_leaf, lambda: (
+        _with()
+        + f"\nSELECT {LEAF} AS res, cell, url AS child_key, 'sha256' AS algo,"
+        " text_sha256 AS hash FROM pages"
+    )),
+    Query("merkle_ladder", _q_merkle_ladder, _sql_ladder),
+    Query("verify_keys", _q_verify_keys, lambda: (
+        _with(
             """k AS (
   SELECT url, lower(text_sha256) AS provided_hash FROM pages WHERE doc_id = 1
   UNION ALL
@@ -2912,15 +2852,10 @@ SELECT k.url, k.provided_hash, p.text_sha256 AS computed_hash,
   CASE WHEN p.url IS NULL THEN 'MISSING'
        WHEN lower(p.text_sha256) = lower(k.provided_hash) THEN 'OK'
        ELSE 'FAIL' END AS status
-FROM k LEFT JOIN pages p ON k.url = p.url""",
-        "verify_cell": _with(
-            "pages_f AS (SELECT * FROM pages WHERE cell = "
-            "(SELECT cell FROM pages WHERE doc_id = 1))",
-            f"stored_f AS ({V.sql_tampered_manifest('pages_f')})",
-        )
-        + "\n"
-        + V.sql_verify_report("pages_f", "stored_f"),
-        "report_log": _with(stored, report)
+FROM k LEFT JOIN pages p ON k.url = p.url"""
+    )),
+    Query("report_log", _q_report_log, lambda: (
+        _with(_STORED, _REPORT)
         + """
 SELECT string_agg(line, chr(10) ORDER BY line) AS log,
        CAST(count(*) AS BIGINT) AS n_lines
@@ -2928,10 +2863,10 @@ FROM (
   SELECT CASE WHEN status = 'FAIL'
               THEN 'FAIL: Hash mismatch: ' || child_key || '.'
               ELSE 'The file ''' || child_key || ''' does not exist.' END AS line
-  FROM report WHERE status IN ('FAIL', 'MISSING'))""",
-        "hash_only": _with()
-        + "\nSELECT url, text_sha256 AS hash FROM pages WHERE doc_id = 2",
-        "manifest_text_roundtrip": _with(
+  FROM report WHERE status IN ('FAIL', 'MISSING'))"""
+    )),
+    Query("manifest_text_roundtrip", _q_manifest_text_roundtrip, lambda: (
+        _with(
             """lines AS (
   SELECT CASE WHEN doc_id % 10 = 0 THEN url || '|' || text_sha256
               WHEN doc_id % 10 = 1 THEN url || '|crc32|' || text_sha256
@@ -2946,312 +2881,123 @@ SELECT p[1] AS child_key,
        CASE WHEN lower(trim(p[2])) IN ('md5','sha1','sha256','sha512')
             THEN lower(trim(p[2])) ELSE 'sha256' END AS algo,
        p[3] AS hash
-FROM parts WHERE len(p) = 3""",
-        "manifest_remove_missing": _with(stored)
+FROM parts WHERE len(p) = 3"""
+    )),
+    Query("manifest_remove_missing", _q_manifest_remove_missing, lambda: (
+        _with(_STORED)
         + """
 SELECT s.cell, s.child_key, s.algo, s.hash
-FROM stored s SEMI JOIN pages p ON s.cell = p.cell AND s.child_key = p.url""",
-        "pip_pages": _with() + "\n" + S.sql_pip(_POLYS),
-        "pip_pages_sql": _with() + "\n" + S.sql_pip(_POLYS),
-        "pip_counts": _with(f"pip AS ({S.sql_pip(_POLYS)})")
-        + "\nSELECT poly_id, count(*) AS n_pages FROM pip GROUP BY poly_id",
-        "knn": _with() + "\n" + S.sql_knn(_QPTS, _KNN_K),
-        "knn_geodesic": _with() + "\n" + S.sql_knn_geodesic(_QPTS, _KNN_K),
-        "distance_join": _with() + "\n" + S.sql_distance_self_join(_DJ_RADIUS),
-        "nn_join": _with() + "\n" + S.sql_nn_join(),
-        "knn_ring": _with() + "\n" + S.sql_knn(_QPTS, _KNN_K),
-        "knn_adaptive": _with() + "\n" + S.sql_knn(_QPTS, _KNN_K),
-        "raster_cells": _with() + "\n" + S.sql_raster(_RASTER_RES),
-        "raster_zoom": _with() + "\n" + S.sql_raster(_RASTER_RES),
-        "raster_pyramid": _with() + "\n" + S.sql_raster_pyramid(6, 3),
-        "raster_vectorize": _with(f"raster AS ({S.sql_raster(_RASTER_RES)})")
-        + "\n"
-        + S.sql_raster_vectorize(_RASTER_RES),
-        "rasterize_polys": S.sql_rasterize(_POLYS, res=5),
-        "compact_cells": S.sql_compact(
-            5, f"(SELECT DISTINCT cell FROM ({S.sql_rasterize(_POLYS, res=5)}) AS _m) AS _mask"
-        ),
-        "uncompact_roundtrip": (
-            f"SELECT DISTINCT cell FROM ({S.sql_rasterize(_POLYS, res=5)}) AS _m"
-        ),
-        "bbox_query": _with() + "\n" + S.sql_bbox(*_BBOX),
-        "zonal_stats": _with() + "\n" + S.sql_zonal_stats(_POLYS),
-        "top_lang_cell": _with() + "\n" + S.sql_top_lang_per_cell(_RASTER_RES),
-        # RECURSIVE must sit on the single WITH covering all CTEs
-        "hotspots": "WITH RECURSIVE "
-        + P.pages_cte(LEAF)
-        + ",\n"
-        + S.sql_hotspots(_HOTSPOT_RES, _HOTSPOT_MIN),
-        # identical output contract to hotspots — the scale path must
-        # reproduce the driver-side union-find's components exactly
-        "hotspots_distributed": "WITH RECURSIVE "
-        + P.pages_cte(LEAF)
-        + ",\n"
-        + S.sql_hotspots(_HOTSPOT_RES, _HOTSPOT_MIN),
-        "raster_diff": _with() + "\n" + S.sql_raster_diff(
+FROM stored s SEMI JOIN pages p ON s.cell = p.cell AND s.child_key = p.url"""
+    )),
+    Query("pip_pages", _q_pip_pages, lambda: _with() + "\n" + S.sql_pip(_POLYS)),
+    Query("knn", _q_knn, lambda: _with() + "\n" + S.sql_knn(_QPTS, _KNN_K)),
+    Query("distance_join", _q_distance_join,
+          lambda: _with() + "\n" + S.sql_distance_self_join(_DJ_RADIUS)),
+    Query("nn_join", _q_nn_join, lambda: _with() + "\n" + S.sql_nn_join()),
+    Query("raster_cells", _q_raster,
+          lambda: _with() + "\n" + S.sql_raster(_RASTER_RES)),
+    Query("rasterize_polys", _q_rasterize, lambda: S.sql_rasterize(_POLYS, res=5)),
+    Query("compact_cells", _q_compact_cells, lambda: S.sql_compact(
+        5, f"(SELECT DISTINCT cell FROM ({S.sql_rasterize(_POLYS, res=5)}) AS _m) AS _mask"
+    )),
+    Query("bbox_query", _q_bbox, lambda: _with() + "\n" + S.sql_bbox(*_BBOX)),
+    Query("zonal_stats", _q_zonal_stats,
+          lambda: _with() + "\n" + S.sql_zonal_stats(_POLYS)),
+    Query("top_lang_cell", _q_top_lang_cell,
+          lambda: _with() + "\n" + S.sql_top_lang_per_cell(_RASTER_RES)),
+    Query("raster_diff", _q_raster_diff, lambda: (
+        _with() + "\n" + S.sql_raster_diff(
             _RASTER_RES, "doc_id % 2 = 0", "doc_id % 2 = 1"
-        ),
-        "od_matrix": TJ.sql_od_matrix(),
-        "track_length": TJ.sql_track_length(),
-        "track_cells": TJ.sql_track_cells(_TRACK_RES),
-        "poly_join": S.sql_poly_intersection_join(
-            S.default_polygons(8), _POLYS_B, _POLY_JOIN_RES
-        ),
-        "raster_users": TJ.sql_raster_users(),
-        "fence_dwells": TJ.sql_fence_dwells(_POLYS),
-        "doc_stats": "SELECT doc_id, "
+        )
+    )),
+    # RECURSIVE must sit on the single WITH covering all CTEs
+    Query("hotspots", _q_hotspots, lambda: (
+        "WITH RECURSIVE "
+        + P.pages_cte(LEAF)
+        + ",\n"
+        + S.sql_hotspots(_HOTSPOT_RES, _HOTSPOT_MIN)
+    )),
+    Query("od_matrix", _q_od_matrix, TJ.sql_od_matrix),
+    Query("raster_users", _q_raster_users, TJ.sql_raster_users),
+    Query("fence_dwells", _q_fence_dwells, lambda: TJ.sql_fence_dwells(_POLYS)),
+    Query("doc_stats", _q_doc_stats, lambda: (
+        "SELECT doc_id, "
         + ", ".join(
             f"{expr} AS {name}" for name, expr in TX.sql_quality_select().items()
         )
-        + " FROM documents",
-        "lang_id": f"SELECT doc_id, {TX.sql_lang_id()} AS lang_pred FROM documents",
-        "fingerprint": (
-            f"SELECT doc_id, {TX.sql_fingerprint('text')} AS fp, "
-            f"CAST(len({TX.sql_tokens('text')}) AS INT) AS n_tokens FROM documents"
-        ),
-        "dedup_exact": (
-            f"SELECT fp, min(doc_id) AS keeper_id, count(*) AS n_copies FROM "
-            f"(SELECT doc_id, {TX.sql_fingerprint('text')} AS fp FROM documents) "
-            f"GROUP BY fp"
-        ),
-        "curation_stats": CUR.sql_curation_stats(),
-        "domain_stats": _with() + "\n" + CUR.sql_domain_stats(),
-        "repetition_stats": REP.sql_repetition_stats(),
-        "vocab_topk": CUR.sql_vocab_topk(),
-        "polygon_stats": S.sql_polygon_stats(
-            f"(VALUES {S.sql_polygon_values(_POLYS)}) AS p(poly_id, wkt)"
-        ),
-        "decontaminate": REP.sql_decontaminate(
-            f"(SELECT * FROM documents WHERE doc_id % {REP.BENCH_MOD} != 0)",
-            f"(SELECT * FROM documents WHERE doc_id % {REP.BENCH_MOD} = 0)",
-        ),
-        "dedup_minhash": D.sql_lsh_pairs_query(),
-        "ngram_jaccard": D.sql_ngram_jaccard_query(),
-        "dup_clusters": D.sql_duplicate_clusters_query(),
-        "pii_scrub": SCRUB.sql_pii_scrub_query(_SQL_PII_PLANTED),
-        "paragraph_dedup": D.sql_paragraph_dedup_query(_SQL_PARA_DOCS),
-        "domain_quantiles": _with() + "\n" + CUR.sql_domain_quantiles(),
-        "shingle_dups": D.sql_shingle_duplicates_query(),
-        "winnow_pairs": D.sql_winnow_pairs_query(),
-        "hybrid_search": _sql_hybrid_search(),
-        "kn_bigrams": CUR.sql_kn_bigram_stats(min_count=_KN_MIN_COUNT),
-        "cms_tokens": SK.sql_cms_tokens(),
-        "hll_cells": _with() + "\n" + SK.sql_hll_estimate(_RASTER_RES),
-        "adamic_adar": GR.sql_adamic_adar(
-            _sql_host_edges(_SQL_LINK_PLANTED)
-        ),
-        "event_transitions": FN.sql_event_transitions(),
-        "bloom_frontier": _with(SK.sql_bloom_ctes(_SQL_BLOOM_CAND))
-        + "\n"
-        + SK.sql_bloom_probe_select(),
-        "hilbert_layout": _with(grid.sql_hilbert_ladder())
-        + "\n"
-        + S.sql_hilbert_layout_stats(),
-        "skew_report": _with(
-            DG.sql_skew_report(
-                "pages", GR.sql_host_of("url"), top=_SKEW_TOP
-            )
+        + " FROM documents"
+    )),
+    Query("lang_id", _q_lang_id,
+          lambda: f"SELECT doc_id, {TX.sql_lang_id()} AS lang_pred FROM documents"),
+    Query("fingerprint", _q_fingerprint, lambda: (
+        f"SELECT doc_id, {TX.sql_fingerprint('text')} AS fp, "
+        f"CAST(len({TX.sql_tokens('text')}) AS INT) AS n_tokens FROM documents"
+    )),
+    Query("dedup_exact", _q_dedup_exact, lambda: (
+        f"SELECT fp, min(doc_id) AS keeper_id, count(*) AS n_copies FROM "
+        f"(SELECT doc_id, {TX.sql_fingerprint('text')} AS fp FROM documents) "
+        f"GROUP BY fp"
+    )),
+    Query("curation_stats", _q_curation_stats, CUR.sql_curation_stats),
+    Query("dedup_minhash", _q_dedup_minhash, D.sql_lsh_pairs_query),
+    Query("ngram_jaccard", _q_ngram_jaccard, D.sql_ngram_jaccard_query),
+    Query("simhash", _q_simhash, D.sql_simhash_docs_query),
+    Query("ann_cosine_topk", _q_ann_topk,
+          lambda: SIM.sql_cosine_topk_query(_ANN_QIDS, _ANN_K)),
+    Query("ann_quantized_topk", _q_ann_quantized_topk,
+          lambda: SIM.sql_cosine_topk_quantized_query(_ANN_QIDS, _ANN_K)),
+    Query("emb_neardup", _q_emb_neardup, lambda: SIM.sql_neardup_query(_NEARDUP_TAU)),
+    Query("ann_lsh_recall", _q_ann_lsh,
+          lambda: SIM.sql_recall_certificate(_ANN_QIDS, _ANN_K)),
+    Query("cell_digests", _q_cell_digests,
+          lambda: _with() + "\n" + M.sql_leaf_digests(LEAF)),
+    Query("cell_digests_salted", _q_cell_digests_salted,
+          lambda: _with() + "\n" + M.sql_salted_digests(LEAF)),
+    Query("point_verify", _q_point_verify, lambda: (
+        _with()
+        + """
+SELECT url, text_sha256 AS computed_hash, TRUE AS match
+FROM pages WHERE doc_id = 1"""
+    )),
+    Query("verify_cell", _q_verify_cell, lambda: (
+        _with(
+            "pages_f AS (SELECT * FROM pages WHERE cell = "
+            "(SELECT cell FROM pages WHERE doc_id = 1))",
+            f"stored_f AS ({V.sql_tampered_manifest('pages_f')})",
         )
         + "\n"
-        + DG.sql_skew_report_select(target=_SKEW_TARGET),
-        "lpa_communities": GR.sql_lpa_communities(
-            _sql_host_edges(_SQL_LINK_PLANTED), rounds=_LPA_ROUNDS
-        ),
-        "hyperball": GR.sql_hyperball(
-            _sql_host_edges(_SQL_LINK_PLANTED), t_max=_HB_TMAX
-        ),
-        "harmonic_centrality": GR.sql_harmonic_centrality(
-            _sql_host_edges(_SQL_LINK_PLANTED), t_max=_HB_TMAX
-        ),
-        "distance_distribution": GR.sql_distance_distribution(
-            _sql_host_edges(_SQL_LINK_PLANTED), t_max=_HB_TMAX
-        ),
-        "modularity": _sql_modularity(),
-        "dsir_weights": _sql_dsir_weights(),
-        "cdc_dedup": _sql_cdc_dedup(),
-        "tile_classes": _with() + "\n" + _sql_tile_classes(),
-        "bowtie_regions": _sql_bowtie(),
-        "bigram_surprisal": CUR.sql_bigram_surprisal(
-            min_count=_BG_MIN_COUNT
-        ),
-        "phrase_search": SRCH.sql_phrase_search(_PHRASE),
-        "lang_temperature": SMP.sql_lang_temperature(),
-        "canonical_resolve": GR.sql_canonical_resolve(_SQL_CANON_PLANTED),
-        "cocite_hosts": GR.sql_cocitation(
-            _sql_host_edges(_SQL_LINK_PLANTED)
-        ),
-        "url_families": f"""
-SELECT canonical_url, MIN(doc_id) AS keeper_id,
-       COUNT(*) AS n_variants
-FROM ({U.sql_canonical_select(_SQL_URL_PLANTED)})
-GROUP BY canonical_url""",
-        "url_quality": U.sql_url_quality_select(_SQL_URL_PLANTED),
-        "crawl_traps": _with() + "\n" + CUR.sql_crawl_traps(),
-        "semantic_dedup": SIM.sql_semantic_dedup(
-            _SEMDEDUP_TAU, _SEMDEDUP_MOD
-        ),
-        "pack_chunks": PK.sql_pack_offsets("documents", 512),
-        "tfidf_terms": CUR.sql_tfidf_top_terms("documents", 3),
-        "bm25_topk": SRCH.sql_bm25_search("documents", _BM25_QUERY, 20),
-        "raster_smooth": _with() + "\n" + S.sql_raster_smooth(_RASTER_RES),
-        "tile_counts": _with() + "\n" + _sql_tile_counts(),
-        "trending_terms": _with() + "\n" + SW.sql_trending_terms("pages", 5),
-        "interval_join": f"""
-WITH sess AS ({SW.sql_sessionize()})
-SELECT e.event_id, e.user_id, s.session_id
-FROM events e JOIN sess s
-  ON e.user_id = s.user_id
- AND epoch_us(e.ts) BETWEEN s.session_start AND s.session_end""",
-        "kmv_cells": _with() + "\n" + SK.sql_kmv_estimate(_RASTER_RES),
-        "html_text": _sql_html_text(),
-        "extract_links": _sql_extract_links(),
-        "host_graph": _sql_host_edges(_SQL_LINK_PLANTED),
-        "pagerank_hosts": _sql_pagerank_hosts(),
-        "hits_hosts": _sql_hits_hosts(),
-        "html_meta": _sql_html_meta(),
-        "mime_kinds": _sql_mime_kinds(),
-        "readability": _sql_readability(),
-        "wet_export": _sql_wet_export(),
-        "fetch_schedule": _sql_fetch_schedule(),
-        "politeness_schedule": _sql_politeness_schedule(),
-        "host_triangles": _sql_host_triangles(),
-        "host_clustering": _sql_host_clustering(),
-        "funnel": FN.sql_funnel(),
-        "retention": FN.sql_retention(),
-        "mirror_hosts": _sql_mirror_hosts(),
-        "c4_clean": _sql_c4_clean(),
-        "trustrank_hosts": _sql_trustrank_hosts(),
-        "bfs_depth": _sql_bfs_depth(),
-        "kcore_hosts": _sql_kcore_hosts(),
-        "degree_mixing": _sql_degree_mixing(),
-        "capture_churn": _sql_capture_churn(),
-        "recrawl_priority": _sql_recrawl_priority(),
-        "moran_tiles": _sql_moran_tiles(),
-        "getis_ord": _sql_getis_ord(),
-        "zorder_layout": _sql_zorder_layout(),
-        "zorder_bbox": _with() + "\n" + S.sql_bbox(*_BBOX),
-        "focal_smooth": _sql_focal_smooth(),
-        "coverage_gaps": _sql_coverage_gaps(),
-        "rendezvous_shards": _sql_rendezvous(),
-        "tile_bursts": _sql_tile_bursts(),
-        "lang_affinity": _sql_lang_affinity(),
-        "cell_extent": _sql_cell_extent(),
-        "ripley_k": _sql_ripley(),
-        "unigram_surprisal": CUR.sql_unigram_surprisal(),
-        "dbscan": _sql_dbscan(),
-        "tile_trend": _sql_tile_trend(),
-        "fetch_budget": _sql_fetch_budget(),
-        "extent_rollup": _sql_extent_rollup(),
-        "robots_filter": _with() + "\n" + _sql_robots_filter(),
-        "inverted_index": SRCH.sql_inverted_index(min_df=2, postings_cap=8),
-        "geohash_counts": _with() + "\n" + _sql_geohash_counts(),
-        "anchor_terms": GR.sql_anchor_terms(_SQL_LINK_PLANTED),
-        "crawl_frontier": GR.sql_crawl_frontier(_SQL_LINK_PLANTED),
-        "surt_keys": _sql_surt_keys(),
-        "warc_export": _sql_warc_export(),
-        "host_components": _sql_host_components(),
-        "host_degrees": GR.sql_host_degrees(
-            _sql_host_edges(_SQL_LINK_PLANTED)
-        ),
-        "mutual_links": GR.sql_mutual_links(
-            _sql_host_edges(_SQL_LINK_PLANTED)
-        ),
-        "boilerplate": CUR.sql_boilerplate_paras(_SQL_BP_PLANTED, 50),
-        "clean_pages": CUR.sql_remove_boilerplate(_SQL_BP_PLANTED, 50),
-        "robots_rules": _sql_robots_rules(),
-        "sitemap_urls": _sql_sitemap_urls(),
-        "cdx_records": _sql_cdx_records(),
-        "latest_capture": _sql_latest_capture(),
-        "authority_pages": _sql_authority_pages(),
-        "length_hist": _sql_length_hist(),
-        "domain_subtree": _sql_domain_subtree(),
-        "collocations": CUR.sql_collocations_topk("documents", 20, 5),
-        "anchor_index": GR.sql_anchor_index(_SQL_LINK_PLANTED),
-        "cell_embeddings": _sql_cell_embeddings(),
-        "frontier_shards": _sql_frontier_shards(),
-        "simhash": D.sql_simhash_docs_query(),
-        "simhash_buckets": (
-            f"WITH sh AS ({D.sql_simhash_docs_query()})\n"
-            "SELECT simhash, count(*) AS n_docs, min(doc_id) AS keeper_id "
-            "FROM sh GROUP BY simhash HAVING count(*) > 1"
-        ),
-        "sample_hash": SMP.sql_hash_sample(
-            "CAST(doc_id AS VARCHAR)", _SAMPLE_FRACTION, "documents"
-        ),
-        "sample_stratified": SMP.sql_stratified_sample(
-            "lang", _STRATA_N, "CAST(doc_id AS VARCHAR)", "documents",
-            cols="doc_id, text, lang, source, n_chars",
-        ),
-        "mixture_weights": SMP.sql_mixture_weights(
-            "source", _MIX_TARGET, "documents"
-        ),
-        "ann_cosine_topk": SIM.sql_cosine_topk_query(_ANN_QIDS, _ANN_K),
-        "ann_quantized_topk": SIM.sql_cosine_topk_quantized_query(
-            _ANN_QIDS, _ANN_K
-        ),
-        "emb_neardup": SIM.sql_neardup_query(_NEARDUP_TAU),
-        "ann_lsh_recall": SIM.sql_recall_certificate(_ANN_QIDS, _ANN_K),
-        "ann_ivf_recall": SIM.sql_recall_certificate(_ANN_QIDS, _ANN_K),
-        "multimodal_features": MM.sql_features_query(P.pages_cte(LEAF)),
-        "multimodal_frames": MM.sql_frames_query(P.pages_cte(LEAF)),
-        "exclusion_filter": _with()
-        + f"\nSELECT doc_id, url FROM pages WHERE NOT {CFG.sql_exclusion_predicate(_EXCL)}",
-        "geofence_alerts": SG.sql_geofence_alerts(_POLYS),
-        "windowed_counts": SW.sql_windowed_counts(),
-        "sessionize": SW.sql_sessionize(),
-        "events_dedup": "SELECT DISTINCT event_id FROM events",
-        "asof_attribution": AS.sql_attribute_to_last_view(),
-        "events_enrich": (
-            "SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT)"
-            " AS prop_k, CAST(round(value * 100, 0) AS BIGINT) AS value_cents"
-            " FROM events"
-        ),
-        "tpch_pricing": """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS VARCHAR) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS VARCHAR)
-         AS sum_base_price,
-       CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
-           * (1 - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(28,8)))
-           AS VARCHAR)
-         AS sum_disc_price,
-       round(CAST(avg(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 6) AS avg_qty,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus""",
-        "orders_by_nation": """
-SELECT n_name, count(*) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS VARCHAR) AS total_price
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY n_name""",
-        "merkle_diff": _sql_merkle_diff(),
-        # frontier = leaf cells whose live digest differs from the digest of
-        # the stored manifest (full-outer: either-side-only cells count).
-        # Digests compare hash STRINGS, so md5-algo entries flag their cell
-        # even when content verifies OK — the frontier is conservative, and
-        # the oracle reproduces that exactly.
-        "incremental_verify": _with(
-            stored,
-            f"live_d AS ({M.sql_leaf_digests(LEAF)})",
-            "stored_d AS (SELECT cell, upper(sha256(string_agg("
-            "child_key || hash, '' ORDER BY child_key || hash))) AS digest "
-            "FROM stored GROUP BY cell)",
-            "chg AS (SELECT coalesce(l.cell, s.cell) AS cell "
-            "FROM live_d l FULL JOIN stored_d s ON l.cell = s.cell "
-            "WHERE l.digest IS NULL OR s.digest IS NULL OR l.digest != s.digest)",
-            report,
-        )
-        + """
-SELECT r.cell, r.child_key, r.status, r.algo, r.stored_hash, r.computed_hash
-FROM report r SEMI JOIN chg c ON r.cell = c.cell""",
-        "lineage": _with(stored, report)
-        + """
-SELECT 'r1' AS run_id, cell, count(*) AS n_rows,
-       CAST(sum(CASE WHEN status = 'OK' THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-       CAST(sum(CASE WHEN status = 'FAIL' THEN 1 ELSE 0 END) AS BIGINT) AS n_fail,
-       CAST(sum(CASE WHEN status = 'ADDED' THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
-       CAST(sum(CASE WHEN status = 'MISSING' THEN 1 ELSE 0 END) AS BIGINT) AS n_missing
-FROM report GROUP BY cell""",
-    }
+        + V.sql_verify_report("pages_f", "stored_f")
+    )),
+    Query("hash_only", _q_hash_only, lambda: (
+        _with()
+        + "\nSELECT url, text_sha256 AS hash FROM pages WHERE doc_id = 2"
+    )),
+    Query("pip_pages_sql", _q_pip_pages_sql,
+          lambda: _with() + "\n" + S.sql_pip(_POLYS)),
+    Query("pip_counts", _q_pip_counts, lambda: (
+        _with(f"pip AS ({S.sql_pip(_POLYS)})")
+        + "\nSELECT poly_id, count(*) AS n_pages FROM pip GROUP BY poly_id"
+    )),
+    Query("knn_ring", _q_knn_ring, lambda: _with() + "\n" + S.sql_knn(_QPTS, _KNN_K)),
+    Query("raster_zoom", _q_raster_zoom,
+          lambda: _with() + "\n" + S.sql_raster(_RASTER_RES)),
+    Query("raster_vectorize", _q_raster_vectorize, lambda: (
+        _with(f"raster AS ({S.sql_raster(_RASTER_RES)})")
+        + "\n"
+        + S.sql_raster_vectorize(_RASTER_RES)
+    )),
+)
+
+
+def registry() -> tuple[Query, ...]:
+    return REGISTRY
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The driver window: the first WINDOW records, in registry order."""
+    return {q.name: q.build for q in REGISTRY[:WINDOW]}
+
+
+def oracle_sql() -> dict[str, str]:
+    """Oracle SQL for the driver window; keys match queries() exactly."""
+    return {q.name: q.oracle() for q in REGISTRY[:WINDOW]}

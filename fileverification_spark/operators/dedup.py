@@ -834,7 +834,7 @@ def cdc_chunks(
     content yields equal chunks REGARDLESS of its offset in the doc —
     an insertion perturbs only the chunks it touches, and chunking
     re-synchronises at the next content boundary. The reference verifies
-    whole files by hash (FV/Hasher/Hasher.cs:78-160); CDC is the
+    whole files by hash (FV/HashInfo.cs:164-238); CDC is the
     sub-file generalisation: shared chunks across mirrored / lightly-
     edited pages dedup even when whole-doc hashes differ.
 

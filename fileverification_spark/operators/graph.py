@@ -2495,6 +2495,12 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     edge relation (isolated labeled hosts are absent, matching the
     undirected-graph domain every other graph operator uses).
 
+    Precondition: ``labels`` must cover every endpoint of ``edges``.
+    ``m_edges`` counts every undirected edge, but the label joins drop
+    an edge with an unlabeled endpoint from ``m_in`` and ``d_tot``, so a
+    partial labelling yields ``q_num`` terms over a smaller edge domain
+    than ``m_edges``. :func:`lpa_communities` labels every node.
+
     Scale shape: ONE distinct-pair reduction (undirected_host_edges),
     TWO host-sized label equi-joins onto it, then partial-aggregatable
     hash-aggs on community — state bounded by |communities|; m arrives

@@ -1,105 +1,26 @@
-"""Driver-contract shape invariants: the driver executes the FIRST 50
-queries() entries, so the window must stay exactly 50 (VERDICT r02 #1),
-every query must carry an oracle, and demoted names must not shadow
-contract names."""
+"""Driver-contract shape invariants: the driver executes queries() and
+compares each result with oracle_sql(), so the window must stay exactly
+50 queries with matching oracle keys; every registered query must carry
+an oracle and a unique name."""
 
 from __future__ import annotations
 
-import json
-import os
-
 import __spark_entry__ as E
-
-_ROOT = os.path.join(os.path.dirname(__file__), "..")
-_CANARIES = {"pages_derive", "verify_report"}
-# Never-driver-run queries allowed OUTSIDE the window: the never-run set
-# is 60 and the window holds 48 after the canaries, so twelve never-run
-# TWINS cede their slot — each to a window sibling that exercises the
-# same operator core (value = the promoted sibling). The nine late-r5
-# operators with genuinely new machinery (hybrid_search, kn_bigrams,
-# cms_tokens, hll_cells, adamic_adar, event_transitions, cdc_dedup,
-# tile_classes, bowtie_regions) were promoted instead. Every twin stays
-# under the strict demoted-gate canon at both scale factors.
-_OVERFLOW_SIBLINGS = {
-    "politeness_schedule": "fetch_schedule",   # HRW politeness scheduler
-    "tile_trend": "tile_bursts",               # space-time tile stats
-    "raster_smooth": "focal_smooth",           # focal kernel over raster
-    "shingle_dups": "winnow_pairs",            # k-gram fingerprint dups
-    "recrawl_priority": "capture_churn",       # churn-band composition
-    "bfs_depth": "bowtie_regions",             # BFS relaxation (run 2x)
-    "host_clustering": "host_triangles",       # triangle-count core
-    "fetch_budget": "rendezvous_shards",       # HRW shards + Hamilton
-    "moran_tiles": "getis_ord",                # W-matrix local stats
-    "extent_rollup": "cell_extent",            # mergeable extent state
-    "zorder_layout": "zorder_bbox",            # Morton interleave/ranges
-    "bigram_surprisal": "kn_bigrams",          # bigram-count relation
-    "geohash_counts": "tile_counts",           # fixed-grid bucket counts
-}
-# Operators added AFTER the r5 window was spent on the 50 least-
-# evidenced queries: no same-core window sibling exists (Hilbert curve,
-# key-skew audit, label propagation are new machinery), so they carry
-# the strict demoted-gate canon at both scale factors from day one.
-_POST_FREEZE = {
-    "hilbert_layout",
-    "skew_report",
-    "lpa_communities",
-}
-_OVERFLOW_TWINS = set(_OVERFLOW_SIBLINGS) | _POST_FREEZE
-
-
-def _driver_ran(rounds=("01", "02", "03", "04")):
-    ran = set()
-    for r in rounds:
-        path = os.path.join(_ROOT, f"CORRECTNESS_r{r}.json")
-        ran |= set(json.load(open(path)))
-    return ran
 
 
 def test_contract_window_is_50():
-    assert len(E.queries()) == 50, (
-        "queries() must stay at the 50-query driver window; "
-        "add new queries to demoted_queries() instead"
-    )
+    assert len(E.queries()) == 50
 
 
 def test_every_query_has_oracle():
-    q, o = E.queries(), E.oracle_sql()
-    assert set(q) == set(o), set(q) ^ set(o)
-    dq, do = E.demoted_queries(), E.demoted_oracle_sql()
-    assert set(dq) == set(do), set(dq) ^ set(do)
+    assert list(E.queries()) == list(E.oracle_sql())
+    for q in E.registry():
+        sql = q.oracle()
+        assert isinstance(sql, str) and sql.strip(), q.name
 
 
 def test_no_name_collisions():
-    both = set(E.queries()) & set(E.demoted_queries())
-    assert not both, both
-
-
-def test_window_carries_never_driver_run_queries():
-    """Round-5 rotation (VERDICT r04 "Next round" #1): the 50-query window
-    is spent on queries with the LEAST driver evidence. Every query that
-    has NEVER appeared in a CORRECTNESS artifact must be in the window;
-    anything green in the immediately preceding round (r04) belongs in the
-    demoted registry — except the two regression canaries."""
-    window = set(E.queries())
-    ran = _driver_ran()
-    never_run = (window | set(E.demoted_queries())) - ran
-    missing = never_run - window - _OVERFLOW_TWINS
-    assert not missing, ("never-driver-run queries left out of the window",
-                         missing)
-
-    r04 = json.load(open(os.path.join(_ROOT, "CORRECTNESS_r04.json")))
-    r04_green = {name for name, row in r04.items()
-                 if row.get("rows_match") and row.get("hash_match")}
-    stale = (window & r04_green) - _CANARIES
-    assert not stale, (
-        "driver-green-in-r04 queries occupying the rotation window", stale)
-    assert _CANARIES <= window
-
-
-def test_overflow_twins_have_promoted_siblings():
-    """A never-run query may cede its window slot only to stand behind a
-    promoted sibling that exercises the same operator core."""
-    window = set(E.queries())
-    for twin, sib in _OVERFLOW_SIBLINGS.items():
-        assert twin in E.demoted_queries(), twin
-        assert sib in window, (twin, sib)
+    names = [q.name for q in E.registry()]
+    assert len(names) == len(set(names)), sorted(
+        n for n in set(names) if names.count(n) > 1
+    )

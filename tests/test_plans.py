@@ -200,9 +200,7 @@ def test_html_meta_and_readability_zero_shuffle(spark):
     the scan at 100 TB."""
     import __spark_entry__ as E
 
-    # window rotations move queries between the contract and demoted
-    # registries — the plan property holds wherever the query lives
-    reg = {**E.demoted_queries(), **E.queries()}
+    reg = {q.name: q.build for q in E.registry()}
     for q in ("html_meta", "readability"):
         df = reg[q](spark, SF)
         plan = X.formatted_plan(df)
@@ -216,7 +214,7 @@ def test_mime_kinds_single_partial_agg_shuffle(spark):
     aggregation before it."""
     import __spark_entry__ as E
 
-    df = {**E.demoted_queries(), **E.queries()}["mime_kinds"](spark, SF)
+    df = {q.name: q.build for q in E.registry()}["mime_kinds"](spark, SF)
     assert X.shuffle_exchange_count(df) == 1
     assert X.has_partial_aggregate(df)
     assert "EvalPython" not in X.formatted_plan(df)

@@ -1,9 +1,7 @@
 """Local stand-in for the driver's correctness gate — STRICT canon.
 
-Round-1 postmortem (VERDICT.md "What's wrong" #5): the old checker
-normalised Decimals, rounded floats and stringified lists, which masked
-nine driver canon mismatches. This version mirrors the driver's observed
-behaviour instead:
+Every registered query (``__spark_entry__.registry()``) is run in Spark
+and in DuckDB and compared the way the driver compares them:
 
 - Spark results via ``DataFrame.toPandas()`` (DecimalType -> object of
   decimal.Decimal, TIMESTAMP_LTZ -> tz-aware datetime64, arrays -> lists);
@@ -16,6 +14,9 @@ behaviour instead:
   int64 124 vs float64 124.0 drift fails exactly as the driver fails it.
 
 Usage:  python tools/check_oracle.py [sf_dir] [query ...]
+
+With no query names every registered query is checked; an unknown name
+is a failure.
 """
 
 from __future__ import annotations
@@ -61,124 +62,59 @@ def make_oracle_con(sf_dir: str):
     return con
 
 
-def check_one(spark, con, sf_dir, name, fn, sql) -> "str | None":
-    """Run one (Spark query, DuckDB oracle) pair through the driver-mirror
-    strict canon. Returns None on full match, else a failure description.
-    Used by main() below and by tests/test_demoted_contract.py."""
-    spdf = fn(spark, sf_dir).toPandas()
-    if sql is None:
-        return None  # rows-only query: executing without error is the check
-    opdf = con.execute(sql).df()
-    sc = canon_frame(spdf)
-    oc = canon_frame(opdf)
-    if len(sc) != len(oc):
-        return f"rows {len(sc)} != {len(oc)}"
+def check_one(spark, con, sf_dir, query) -> "str | None":
+    """Run one registry record through the driver-mirror strict canon.
+    Returns None on a full match, else a failure description with the
+    schema, dtypes and first differing row."""
+    sc = canon_frame(query.build(spark, sf_dir).toPandas())
+    oc = canon_frame(con.execute(query.oracle()).df())
     if list(sc.columns) != list(oc.columns):
-        return f"schema {list(sc.columns)} != {list(oc.columns)}"
-    if frame_hash(sc) != frame_hash(oc):
-        return "value hash mismatch"
-    return None
+        return (
+            f"schema mismatch, rows {len(sc)}/{len(oc)}\n"
+            f"   spark cols : {list(sc.columns)} {list(sc.dtypes)}\n"
+            f"   oracle cols: {list(oc.columns)} {list(oc.dtypes)}"
+        )
+    if len(sc) == len(oc) and frame_hash(sc) == frame_hash(oc):
+        return None
+    msg = [
+        f"value mismatch, rows {len(sc)}/{len(oc)}",
+        f"   spark dtypes : {dict(zip(sc.columns, map(str, sc.dtypes)))}",
+        f"   oracle dtypes: {dict(zip(oc.columns, map(str, oc.dtypes)))}",
+    ]
+    for i in range(min(len(sc), len(oc))):
+        a = "\x01".join(str(v) for v in sc.iloc[i])
+        b = "\x01".join(str(v) for v in oc.iloc[i])
+        if a != b:
+            msg += [f"   row {i} spark : {a[:220]}", f"   row {i} oracle: {b[:220]}"]
+            break
+    return "\n".join(msg)
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--demoted"]
-    demoted = "--demoted" in sys.argv[1:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
 
     import __spark_entry__ as entrymod
     from fileverification_spark.session import get_spark
 
+    records = {q.name: q for q in entrymod.registry()}
+    unknown = sorted(set(names) - set(records))
+    if unknown:
+        # a filter that matches nothing must not print "FAILURES: 0"
+        print(f"UNKNOWN QUERY NAMES: {unknown}")
+        print("FAILURES:", len(unknown))
+        return 1
+
     spark = get_spark("oracle-check")
     con = make_oracle_con(sf_dir)
-
-    if demoted:
-        qs = entrymod.demoted_queries()
-        oracles = entrymod.demoted_oracle_sql()
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
-    if only:
-        # names not in the selected registry fall back to the other one;
-        # a name in neither is a HARD failure — a filter that matches
-        # nothing used to print "FAILURES: 0" vacuously (round-4 bug:
-        # two broken demoted oracles passed the CLI for hours)
-        other_q = entrymod.queries() if demoted else entrymod.demoted_queries()
-        other_o = entrymod.oracle_sql() if demoted else entrymod.demoted_oracle_sql()
-        missing = []
-        for n in only:
-            if n in qs:
-                continue
-            if n in other_q:
-                qs = {**qs, n: other_q[n]}
-                if n in other_o:
-                    oracles = {**oracles, n: other_o[n]}
-            else:
-                missing.append(n)
-        if missing:
-            print(f"UNKNOWN QUERY NAMES: {sorted(missing)}")
-            print("FAILURES:", len(missing))
-            return 1
     failures = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for q in [records[n] for n in names] or records.values():
         try:
-            spdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"{name:30s} SPARK ERROR: {e}")
-            failures += 1
-            continue
-        if name not in oracles:
-            if only and name in only:
-                # An explicitly requested name with no oracle is a
-                # failure, not a rows-only pass — otherwise --only can
-                # still report "FAILURES: 0" for a query whose oracle
-                # entry is missing (the vacuous-pass hole, ADVICE r4).
-                print(f"{name:30s} rows={len(spdf):7d}  "
-                      "MISSING ORACLE for explicitly requested name")
-                failures += 1
-            else:
-                print(f"{name:30s} rows={len(spdf):7d}  (no oracle — rows-only)")
-            continue
-        try:
-            opdf = con.execute(oracles[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"{name:30s} ORACLE ERROR: {e}")
-            failures += 1
-            continue
-        try:
-            sc = canon_frame(spdf)
-            oc = canon_frame(opdf)
-        except Exception as e:  # noqa: BLE001 - driver dies here on lists
-            print(f"{name:30s} CANON ERROR (driver would ERR): {e}")
-            failures += 1
-            continue
-        ok_rows = len(sc) == len(oc)
-        ok_schema = list(sc.columns) == list(oc.columns)
-        sh, oh = frame_hash(sc), frame_hash(oc)
-        ok_hash = sh == oh
-        status = "OK" if (ok_rows and ok_schema and ok_hash) else "MISMATCH"
-        print(
-            f"{name:30s} {status}  rows {len(sc)}/{len(oc)}"
-            f" schema={'=' if ok_schema else 'DIFF'} hash={'=' if ok_hash else 'DIFF'}"
-        )
-        if status != "OK":
-            failures += 1
-            if not ok_schema:
-                print(f"   spark cols : {list(sc.columns)} {list(sc.dtypes)}")
-                print(f"   oracle cols: {list(oc.columns)} {list(oc.dtypes)}")
-            elif not ok_hash:
-                print(f"   spark dtypes : {dict(zip(sc.columns, map(str, sc.dtypes)))}")
-                print(f"   oracle dtypes: {dict(zip(oc.columns, map(str, oc.dtypes)))}")
-                n = min(len(sc), len(oc))
-                for i in range(n):
-                    a = "\x01".join(str(v) for v in sc.iloc[i])
-                    b = "\x01".join(str(v) for v in oc.iloc[i])
-                    if a != b:
-                        print(f"   row {i} spark : {a[:220]}")
-                        print(f"   row {i} oracle: {b[:220]}")
-                        break
+            err = check_one(spark, con, sf_dir, q)
+        except Exception as e:  # noqa: BLE001 - the driver reports ERR and goes on
+            err = f"ERROR: {type(e).__name__}: {e}"
+        print(f"{q.name:30s} {'OK' if err is None else err}")
+        failures += err is not None
     print("FAILURES:", failures)
     return 1 if failures else 0
 
