@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fileverification_spark.functions import text as TX
+from fileverification_spark.operators import fixpoint as FP
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 HASH_MASK = 0x7FFFFFFF
@@ -414,63 +415,29 @@ def duplicate_clusters(
     keeper = that minimum (deterministic).
 
     Scale shape: candidate generation stays bucketed (LSH bands), exact
-    Jaccard runs only on survivors, and components come from min-label
-    propagation over the verified-pair relation — the same distributed
-    fixpoint as ``spatial.hotspots_distributed`` (no driver-side
-    collect; the edge relation is |verified pairs|, tiny next to the
-    corpus). Each sweep is one equi-join + one partial-agg min, eagerly
-    staged so lineage stays flat; convergence is a changed-row count
-    (one driver scalar per sweep). ``max_iters`` bounds chain-shaped
-    components and raises rather than returning unconverged labels.
+    Jaccard runs only on survivors, and components come from the shared
+    min-label fixpoint (:func:`fixpoint.min_labels`, as
+    ``graph.connected_components``) over the verified-pair relation — no
+    driver-side collect; the edge relation is |verified pairs|, tiny
+    next to the corpus. Each sweep is one eagerly staged join + partial-
+    agg min whose Observation carries the changed-row count.
+    ``max_iters`` bounds chain-shaped components and raises rather than
+    returning unconverged labels.
     """
-    from fileverification_spark.operators.spatial import _stage
-
     sigs = minhash_signatures(docs, num_hashes, shingle_n)
     pairs = lsh_candidate_pairs(sigs, bands, num_hashes)
     verified = ngram_jaccard_pairs(docs, pairs, shingle_n).where(
         F.col("jaccard") >= tau
     )
-    fwd = verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = _stage(
-        fwd.unionByName(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ),
-        eager=True,
+    labels = FP.min_labels(
+        verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        "duplicate_clusters",
+        max_iters,
     )
-    labels = _stage(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("cluster_id")),
-        eager=True,
-    )
-    for _ in range(max_iters):
-        msgs = edges.join(
-            labels, edges["src"] == labels["doc_id"], "inner"
-        ).select(F.col("dst").alias("doc_id"), "cluster_id")
-        new_labels = _stage(
-            labels.unionByName(msgs)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id")),
-            eager=True,
-        )
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters: labels not converged after {max_iters} "
-            "sweeps (component diameter exceeds max_iters)"
-        )
     return labels.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_keeper"),
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+        (F.col("node") == F.col("label")).alias("is_keeper"),
     )
 
 

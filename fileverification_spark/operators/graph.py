@@ -30,9 +30,10 @@ Scale shape at 10^12 pages / 1e8 hosts: the edge relation is shuffled
 ONCE onto its join keys and persisted; each iteration re-uses that
 partitioning (two shuffles per iteration: ranks onto src, contributions
 onto dst — both over the ~1e8-row host relation, never the 1e12-row page
-relation). ``ranks`` is persisted per iteration so the plan's lineage
-stays linear in ``iters`` (at cluster scale swap for
-``localCheckpoint()`` to truncate lineage entirely).
+relation). Each iteration's ``ranks`` is staged eagerly
+(:func:`fixpoint.stage`: a reliable checkpoint when the session has a
+checkpoint dir, a local one otherwise), so lineage is truncated every
+iteration and no plan grows with ``iters``.
 
 Overflow bound (documented, not checked per-row): all values are
 non-negative and total rank mass is conserved at ``n_nodes * scale``,
@@ -48,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fileverification_spark.functions import html as HT
+from fileverification_spark.operators import fixpoint as FP
 
 #: host part of an http(s) URL — identical PCRE in Spark and DuckDB
 #: (same pattern as curation.DOMAIN_RE but anchored without requiring a
@@ -132,11 +134,19 @@ def pagerank(
     literal (one fewer broadcast exchange per iteration), so the ladder
     after the preflight is one lazy plan.
 
-    ``handles``: pass a list to receive every internally-persisted
-    DataFrame (including the returned ranks). Benchmarks that time
-    repeated calls MUST unpersist them between runs — Spark's
-    CacheManager matches identical logical plans, so a second call
-    would silently serve the first call's caches and time nothing.
+    Each iteration is one eager :func:`fixpoint.stage`, so the plan an
+    iteration builds is one step over a materialised rank relation,
+    whatever ``iters`` is (a lazily persisted ladder nests the whole
+    history into every plan, and its plan string alone outgrew a 6g
+    heap at 8 iterations).
+
+    ``persist``/``handles``: the node and weighted-edge relations are
+    persisted (``persist=True``) and appended to ``handles`` when a
+    list is passed. Benchmarks that time repeated calls MUST unpersist
+    them between runs — Spark's CacheManager matches identical logical
+    plans, so a second call would silently serve the first call's
+    caches and time nothing. The staged ranks are new checkpoints each
+    call and are never served from a cache.
     """
 
     def _p(df: DataFrame) -> DataFrame:
@@ -183,10 +193,11 @@ def pagerank(
         "node", F.lit(scale).cast("long").alias("rank")
     )
     for _ in range(iters):
-        ranks = _p(
+        ranks = FP.stage(
             _pagerank_step(
                 nodes, e2, outw, max(n_val, 1), ranks, scale, d_num, d_den
-            )
+            ),
+            eager=True,
         )
     return ranks
 
@@ -327,7 +338,6 @@ def hits(
     scale: int = HITS_SCALE,
     persist: bool = True,
     handles: list | None = None,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1998, JACM 46(5)) over
     ``(src, dst, w)`` in exact int64 arithmetic: returns
@@ -346,20 +356,18 @@ def hits(
 
     Same distribution discipline as :func:`pagerank`: the per-iteration
     shuffles are the two edge-keyed joins + two node aggs (never the
-    pages relation) and the 1-row max relations are broadcast. Unlike
-    pagerank, each half-step is ``localCheckpoint``-ed rather than
-    lazily persisted: HITS references the previous half-step TWICE per
-    step (the contribution join AND the max broadcast), so the lazy
-    logical plan grows ~4^iters and Catalyst re-analysis dominates
-    (measured 11.5 s lazy vs 1.7 s checkpointed for 3 iterations on a
-    130-node graph). The checkpoint truncates lineage to a node-sized
-    materialized relation per half-step. ``localCheckpoint`` is
-    executor-local: an executor lost mid-ladder loses its blocks with no
-    lineage to recompute them — fine on local[N], fatal on a 1000-
-    executor run. Pass ``reliable_checkpoint_dir`` (HDFS/S3 path) on a
-    cluster and each half-step is written through
-    ``RDD.checkpoint`` to shared storage instead, surviving executor
-    loss (or use the snapshot-committed pattern of
+    pages relation) and the 1-row max relations are broadcast. Where
+    pagerank stages each iteration, HITS stages each HALF-step eagerly
+    (:func:`fixpoint.stage`) rather than lazily persisting it: it
+    references the previous half-step TWICE per step (the contribution
+    join AND the max broadcast), so the lazy logical plan grows
+    ~4^iters and Catalyst re-analysis dominates (measured 11.5 s lazy vs
+    1.7 s checkpointed for 3 iterations on a 130-node graph). The
+    checkpoint truncates lineage to a node-sized materialized relation
+    per half-step. Staging follows the session: with a checkpoint dir
+    set (shared storage on a cluster) each half-step is a reliable
+    checkpoint that survives executor loss, otherwise an executor-local
+    ``localCheckpoint`` (or use the snapshot-committed pattern of
     :func:`pagerank_resumable` for driver-failure durability too).
     ``handles`` receives the persisted inputs (edges/nodes)
     for the bench cache-reuse guard; checkpointed half-steps are new
@@ -405,18 +413,6 @@ def hits(
     )
     hub = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
 
-    if reliable_checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(
-            reliable_checkpoint_dir
-        )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint_dir is not None:
-            # reliable (shared-storage) checkpoint: survives executor
-            # loss mid-ladder, unlike executor-local blocks
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     def _norm(raw: DataFrame, col: str) -> DataFrame:
         mx = raw.agg(
             F.greatest(F.lit(1).cast("long"),
@@ -440,7 +436,7 @@ def hits(
         # recomputes ~4x inside each hub materialization and the ladder
         # ran ~12% slower isolated (8.91 s vs 7.97 s at the sf0.1 bench
         # leg); per-half-step eager checkpoints are the floor here.
-        return _ckpt(out)
+        return FP.stage(out, eager=True)
 
     for _ in range(iters):
         a_raw = (
@@ -654,52 +650,18 @@ def connected_components(
     returns ``(node, component)`` with component = min node label of the
     component (lexicographic for strings — both engines agree).
 
-    Same distributed min-label fixpoint as ``dedup.duplicate_clusters``
-    / ``spatial.hotspots_distributed`` (this is the third surface the
-    pattern powers — generalized here so graph consumers don't re-derive
-    it): each sweep is one equi-join + one partial-aggregatable min,
-    eagerly staged so lineage stays flat; convergence = changed-row
-    count (one driver scalar per sweep); sweeps needed = component
-    diameter, so the web-typical short-diameter host graph converges in
-    a handful. ``max_iters`` bounds chain-shaped graphs and raises
-    rather than returning unconverged labels."""
-    from fileverification_spark.operators.spatial import _stage
-
-    fwd = edges.select("src", "dst")
-    und = _stage(
-        fwd.unionByName(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        eager=True,
-    )
-    labels = _stage(
-        und.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component")),
-        eager=True,
-    )
-    for _ in range(max_iters):
-        msgs = und.join(labels, und["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), "component"
-        )
-        new_labels = _stage(
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("component").alias("component")),
-            eager=True,
-        )
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if n_changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components: not converged after {max_iters} sweeps"
-    )
+    The shared min-label fixpoint (:func:`fixpoint.min_labels`, also
+    behind ``dedup.duplicate_clusters`` and
+    ``spatial.hotspots_distributed``): each sweep is one eagerly staged
+    action — one equi-join against the (broadcast, when small) label
+    relation and one partial-aggregatable min — whose Observation
+    carries the changed-row count; sweeps needed = component diameter
+    + 1, so the web-typical short-diameter host graph converges in a
+    handful. ``max_iters`` bounds chain-shaped graphs and raises rather
+    than returning unconverged labels."""
+    return FP.min_labels(
+        edges, "connected_components", max_iters
+    ).select("node", F.col("label").alias("component"))
 
 
 def sql_connected_components(edges_rel: str) -> str:
@@ -2058,50 +2020,48 @@ def lpa_communities(edges: DataFrame, rounds: int = 3) -> DataFrame:
     deterministic one. Web-typical host communities (mirror families,
     link farms, CMS clusters) crystallize in 2-3 sweeps.
 
-    Scale shape: per sweep ONE host-sized equi-join (labels onto the
-    undirected edge relation) + two partial-aggregatable hash-aggs
-    ((node, label) counts, then the per-node argmax via min(struct(-c,
-    label)) — never a window over the edge stream). Each sweep is
-    eagerly staged (the connected_components discipline) so lineage
-    stays flat; hub skew is absorbed by the map-side partial agg on
-    (node, label)."""
+    Scale shape: each sweep is ONE eagerly staged action (the
+    connected_components discipline, so lineage stays flat): one
+    host-sized equi-join of the label relation onto the undirected edge
+    relation — the label side broadcast when it fits Spark's
+    ``autoBroadcastJoinThreshold``, see :func:`fixpoint.stage_labels` —
+    and one ``groupBy(node)`` with ``mode(community, deterministic)``,
+    whose tie rule (the smallest of the most frequent labels) is the
+    canon above. ``mode`` partial-aggregates a per-label count map
+    map-side, so hub skew never reaches the shuffle as raw messages.
+    See :func:`lpa_round`."""
     und = undirected_host_edges(edges)
-    both = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    from fileverification_spark.operators.spatial import _stage
-
-    both = _stage(both, eager=True)
-    labels = _stage(
-        both.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("community")),
+    both = FP.stage(
+        und.select(F.col("a").alias("node"), F.col("b").alias("dst")).unionByName(
+            und.select(F.col("b").alias("node"), F.col("a").alias("dst"))
+        ),
         eager=True,
     )
+    labels, broadcast = FP.stage_labels(
+        both.select("node").distinct().select("node", F.col("node").alias("community"))
+    )
     for _ in range(rounds):
-        msgs = (
-            both.join(labels, both["a"] == labels["node"])
-            .select(F.col("b").alias("node"), "community")
-            .groupBy("node", "community")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-        labels = _stage(
-            msgs.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("community"))
-                ).alias("best")
-            )
-            .select("node", F.col("best.community").alias("community")),
-            eager=True,
-        )
+        labels = FP.stage(lpa_round(both, labels, broadcast), eager=True)
     return labels.select(F.col("node").alias("host"), "community")
+
+
+def lpa_round(edges: DataFrame, labels: DataFrame, broadcast: bool) -> DataFrame:
+    """One synchronous LPA sweep over symmetric ``edges (node, dst)`` and
+    ``labels (node, community)``: every ``dst`` adopts the most frequent
+    label among its neighbours, ties to the smallest. One join (label
+    side broadcast when ``broadcast``) and one aggregate."""
+    side = F.broadcast(labels) if broadcast else labels
+    return (
+        edges.join(side, "node")
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.mode("community", True).alias("community"))
+    )
 
 
 def sql_lpa_communities(edges_rel: str, rounds: int = 3) -> str:
     """Oracle: the same sweeps as a CTE ladder (own WITH — standalone).
     Plurality argmax spelled as max-count window + min(label), the
-    tie canon :func:`lpa_communities` encodes via min(struct)."""
+    tie canon :func:`lpa_round` gets from ``mode(…, deterministic)``."""
     parts = [
         f"""e0 AS (SELECT src, dst FROM ({edges_rel}) raw WHERE src != dst),
 und AS (SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM e0
@@ -2274,15 +2234,13 @@ def hyperball(edges: DataFrame, t_max: int = 3) -> DataFrame:
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    from fileverification_spark.operators.spatial import _stage
-
-    sk = _stage(_hb_own_sketch(nodes), eager=True)
+    sk = FP.stage(_hb_own_sketch(nodes), eager=True)
     out = _hb_estimate(sk, 0)
     for t in range(1, t_max + 1):
         msgs = edges.join(sk, edges["dst"] == sk["node"]).select(
             edges["src"].alias("node"), sk["reg"], sk["rho_max"]
         )
-        sk = _stage(
+        sk = FP.stage(
             sk.union(msgs)
             .groupBy("node", "reg")
             .agg(F.max("rho_max").alias("rho_max")),

@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from fileverification_spark import grid
+from fileverification_spark.operators import fixpoint as FP
 
 # ---------------------------------------------------------------------------
 # Deterministic synthetic polygon + query-point sets (no external data).
@@ -736,7 +737,7 @@ def raster_pyramid(pages: DataFrame, finest: int, coarsest: int) -> DataFrame:
     vs L full scans for the naive per-res loop, which at 10^12 rows is
     the difference between one pass and a dozen. Each intermediate level
     feeds two consumers (its own histogram fold + the next zoom-out), so
-    it is staged via :func:`_stage` (reliable checkpoint on a cluster,
+    it is staged via :func:`fixpoint.stage` (reliable checkpoint on a cluster,
     localCheckpoint locally) exactly like the nn_join ladder.
 
     This is the engine's hypertable-rollup analogue: the reference's
@@ -751,7 +752,7 @@ def raster_pyramid(pages: DataFrame, finest: int, coarsest: int) -> DataFrame:
         if res < finest:
             cur = zoom_per_lang(cur, res + 1, res)
         if res > coarsest:
-            cur = _stage(cur)  # two consumers: fold below + next zoom
+            cur = FP.stage(cur)  # two consumers: fold below + next zoom
         outs.append(
             fold_lang_hist(cur).select(
                 "cell", F.lit(res).cast("int").alias("res"),
@@ -1148,12 +1149,12 @@ def compact_cells(cells: DataFrame, res: int, col: str = "cell") -> DataFrame:
     resolutions stay unambiguous)."""
     if res == 0:
         return cells.select(F.col(col).alias("cell")).distinct()
-    # The leaf set is referenced by every level below; _stage (lazy)
+    # The leaf set is referenced by every level below; FP.stage (lazy)
     # truncates its lineage so the res+1 consumers share ONE
     # materialisation of the (tiny, |cells|-row) mask instead of res+1
     # copies of however expensive the producing plan was — reliable
     # checkpoint on the cluster, localCheckpoint in local/test runs.
-    leaf = _stage(cells.select(F.col(col).alias("cell")).distinct())
+    leaf = FP.stage(cells.select(F.col(col).alias("cell")).distinct())
     # Non-recursive: an ancestor at level r is FULL iff all 4^(res-r) of
     # its descendant slots are present, so every level aggregates straight
     # off the leaf set — each full[r] is leaf -> one groupBy, and the
@@ -1412,20 +1413,6 @@ SELECT cell, lang AS top_lang, cnt FROM (
 # ---------------------------------------------------------------------------
 
 
-def _stage(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Lineage barrier for multi-consumer intermediates: a RELIABLE
-    checkpoint when the session has a checkpoint dir configured (the
-    cluster deployment — survives executor loss and truncates lineage in
-    the persisted plan, the staged-table materialisation between passes),
-    else a localCheckpoint (the local/test default, executor-local
-    blocks only). ``eager=True`` for iterate-to-fixpoint loops where the
-    sweep must materialise before the convergence probe reads it."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
 def _argmin_pair(cand: DataFrame) -> DataFrame:
     """rank-1 by (dist2, nn_url) per url — as min(struct(...)), NOT a
     row_number window: struct-min is partial-aggregatable, so the shuffle
@@ -1632,7 +1619,7 @@ def nn_join_with_tail(
         # anti-join; staging it (lazy, bounded by |left| rows) stops the
         # level's join+argmin from recomputing once per consumer —
         # measured 3x on the tail path.
-        certified = _stage(best.where(F.col("dist2") < F.lit(guard * guard)))
+        certified = FP.stage(best.where(F.col("dist2") < F.lit(guard * guard)))
         certified_parts.append(certified)
         remaining = remaining.join(certified, "url", "left_anti")
     # pathological tail: cartesian re-scan of whatever survived every level
@@ -1851,12 +1838,14 @@ def hotspots_distributed(
       disk (grid_disk k=1, longitude wraps) and semi-joins back to the
       hot set — |edges| <= 8|hot|, shuffled on the cell key;
     - iterate label(cell) <- min(label(cell), min label over neighbors)
-      to fixpoint. Each sweep is one equi-join + one partial-agg min on
-      the TINY hot relation (never |pages|); the loop runs O(component
-      diameter) sweeps, each eagerly staged (reliable checkpoint on the
-      cluster, localCheckpoint locally) so lineage stays flat instead of
-      doubling per iteration (same staging discipline as nn_join levels). Convergence is detected with a changed-row count
-      — one driver-side scalar per sweep, never row data.
+      to fixpoint with the shared min-label loop
+      (:func:`fixpoint.min_labels`, as ``graph.connected_components``).
+      Each sweep is one eagerly staged equi-join + partial-agg min on
+      the TINY hot relation (never |pages|), so lineage stays flat; the
+      loop runs O(component diameter) sweeps and reads convergence from
+      an Observation on the sweep's own staging action — one driver
+      scalar per sweep, never row data. Every hot cell carries its own
+      label into each sweep, so an isolated hot cell keeps its own id.
 
     The driver path (:func:`hotspots`) stays preferable interactively at
     coarse res: label propagation pays ~diameter shuffle rounds where
@@ -1872,46 +1861,22 @@ def hotspots_distributed(
         "cell",
         F.explode(grid.grid_disk(F.col("cell"), res, 1)).alias("nbr"),
     ).where(F.col("cell") != F.col("nbr"))
-    edges = nbrs.join(
-        hot.select(F.col("cell").alias("nbr")), "nbr", "left_semi"
-    ).persist()
-
-    labels = _stage(hot.select("cell", F.col("cell").alias("label")), eager=True)
-    for _ in range(max_iters):
-        msgs = edges.join(labels, "cell", "inner").select(
-            F.col("nbr").alias("cell"), "label"
+    edges = nbrs.join(hot.select(F.col("cell").alias("nbr")), "nbr", "left_semi")
+    try:
+        labels = FP.min_labels(
+            edges.select(F.col("cell").alias("src"), F.col("nbr").alias("dst")),
+            "hotspots_distributed",
+            max_iters,
+            nodes=hot.select(F.col("cell").alias("node")),
         )
-        new_labels = _stage(
-            labels.unionByName(msgs)
-            .groupBy("cell")
-            .agg(F.min("label").alias("label")),
+        return FP.stage(
+            raster.join(labels, raster["cell"] == labels["node"]).select(
+                "cell", "n_pages", F.col("label").alias("hotspot_id")
+            ),
             eager=True,
         )
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "cell")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if n_changed == 0:
-            break
-    else:
+    finally:
         raster.unpersist()
-        edges.unpersist()
-        raise RuntimeError(
-            f"hotspots_distributed: labels not converged after {max_iters} "
-            "sweeps (component diameter exceeds max_iters)"
-        )
-    out = _stage(
-        raster.join(labels, "cell", "inner").select(
-            "cell", "n_pages", F.col("label").alias("hotspot_id")
-        ),
-        eager=True,
-    )
-    raster.unpersist()
-    edges.unpersist()
-    return out
 
 
 def sql_hotspots(res: int, min_count: int, pages_rel: str = "pages") -> str:

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from fileverification_spark.session import get_spark
 
@@ -30,3 +32,23 @@ def pages_small(spark):
     from fileverification_spark.sources import pages as P
 
     return P.pages_with_derived(spark, SF0001).cache()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """A context manager that runs its block with broadcast joins off
+    (``spark.sql.autoBroadcastJoinThreshold=-1``) and restores the
+    session's threshold afterwards: the shuffled-join path of operators
+    that broadcast a small side."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def off():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return off

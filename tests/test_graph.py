@@ -11,7 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from fileverification_spark.functions import html as HT
+from fileverification_spark.operators import fixpoint as FP
 from fileverification_spark.operators import graph as GR
+from fileverification_spark.plans import explain as X
 
 SCALE = 10**5  # small scale keeps hand numbers readable; exactness is
                # scale-independent
@@ -179,7 +181,7 @@ def test_crawl_frontier_excludes_fetched(spark):
     assert got == {"https://b.com/new"}
 
 
-def test_connected_components_multi_component(spark):
+def test_connected_components_multi_component(spark, no_broadcast):
     edges = spark.createDataFrame(
         [
             ("a.com", "b.com", 1),
@@ -202,6 +204,13 @@ def test_connected_components_multi_component(spark):
         "lone.net": "lone.net",
         "lone2.net": "lone.net",
     }
+    # the shuffled label side (above the broadcast threshold) agrees
+    with no_broadcast():
+        shuffled = {
+            r["node"]: r["component"]
+            for r in GR.connected_components(edges).collect()
+        }
+    assert shuffled == got
 
 
 def test_connected_components_chain_converges(spark):
@@ -228,6 +237,41 @@ def test_connected_components_fails_loudly_unconverged(spark):
     )
     with pytest.raises(RuntimeError, match="not converged"):
         GR.connected_components(edges, max_iters=4).collect()
+
+
+def _one_round(spark, edges, op):
+    """One round of ``op`` as its loop builds it: staged symmetric edges,
+    the staged initial label relation, and the broadcast decision."""
+    fwd = edges.select(F.col("src").alias("node"), "dst")
+    und = FP.stage(
+        fwd.unionByName(
+            fwd.select(F.col("dst").alias("node"), F.col("node").alias("dst"))
+        ).distinct(),
+        eager=True,
+    )
+    name = "label" if op == "cc" else "community"
+    labels, broadcast = FP.stage_labels(
+        und.select("node").distinct().select("node", F.col("node").alias(name))
+    )
+    if op == "cc":
+        return FP.min_label_sweep(und, labels, broadcast), broadcast
+    return GR.lpa_round(und, labels, broadcast), broadcast
+
+
+@pytest.mark.parametrize("op", ["cc", "lpa"])
+def test_round_is_one_join_one_shuffle(spark, hand_edges, no_broadcast, op):
+    """One CC sweep / LPA round = a broadcast join of the small label
+    relation + ONE shuffle (the per-node aggregate) — no second join of
+    new against old labels. With broadcast disabled the label side is
+    shuffled instead, as any equi-join side above the threshold."""
+    sweep, broadcast = _one_round(spark, hand_edges, op)
+    assert broadcast
+    assert X.uses_broadcast_join(sweep)
+    assert X.shuffle_exchange_count(sweep) == 1
+    with no_broadcast():
+        sweep, broadcast = _one_round(spark, hand_edges, op)
+        assert not broadcast
+        assert not X.uses_broadcast_join(sweep)
 
 
 def test_pagerank_resumable_bit_identical(spark, hand_edges, tmp_path):

@@ -8,6 +8,7 @@ written out literally, no tolerance anywhere.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fileverification_spark.operators import curation as CUR
@@ -164,24 +165,43 @@ def test_hits_matches_python_replay_bit_for_bit(spark):
     assert got["c"][1] == 10**6
 
 
-def test_hits_reliable_checkpoint_matches_local(spark, tmp_path):
-    """reliable_checkpoint_dir is a durability lever only: the ladder
-    writes half-steps through RDD.checkpoint to shared storage (survives
-    executor loss at 1000-executor scale) and the results are bit-equal
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Run the test with a session checkpoint dir, so every staged round
+    is a reliable checkpoint (the cluster deployment); restore "no dir"
+    afterwards, so later tests stage through localCheckpoint again."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        yield ckpt
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
+_CKPT_EDGES = [("a", "b", 2), ("a", "c", 1), ("b", "c", 3),
+               ("d", "c", 1), ("c", "a", 1), ("x", "y", 1)]
+
+
+@pytest.mark.parametrize("op", [
+    lambda df: GR.hits(df, iters=3, scale=10**6),
+    lambda df: GR.connected_components(df),
+    lambda df: GR.lpa_communities(df, rounds=3),
+], ids=["hits", "connected_components", "lpa_communities"])
+def test_reliable_checkpoint_matches_local(spark, request, op):
+    """The staging policy is a durability lever only: with a checkpoint
+    dir set, every staged round is written through RDD.checkpoint to
+    shared storage (survives executor loss at 1000-executor scale),
+    convergence Observations still fill, and the results are identical
     to the default localCheckpoint path."""
-    edges = [("a", "b", 2), ("a", "c", 1), ("b", "c", 3),
-             ("d", "c", 1), ("c", "a", 1)]
-    df = spark.createDataFrame(edges, "src string, dst string, w long")
-    want = {r["node"]: (r["hub"], r["auth"])
-            for r in GR.hits(df, iters=3, scale=10**6).collect()}
-    got = {r["node"]: (r["hub"], r["auth"])
-           for r in GR.hits(
-               df, iters=3, scale=10**6,
-               reliable_checkpoint_dir=str(tmp_path / "ckpt"),
-           ).collect()}
-    assert got == want
-    import os
-    assert os.listdir(tmp_path / "ckpt"), "no reliable checkpoint written"
+    df = spark.createDataFrame(_CKPT_EDGES, "src string, dst string, w long")
+    want = sorted(op(df).collect())
+    # the checkpoint dir is set only now, after the local-staging run
+    ckpt = request.getfixturevalue("reliable_checkpoints")
+    assert sorted(op(df).collect()) == want
+    assert any(ckpt.rglob("rdd-*")), "no reliable checkpoint written"
 
 
 def test_hits_overflow_preflight_fail_loud(spark):

@@ -198,7 +198,7 @@ def _edges(spark, pairs):
     )
 
 
-def test_lpa_two_cliques_one_bridge(spark):
+def test_lpa_two_cliques_one_bridge(spark, no_broadcast):
     # clique {a1,a2,a3} + clique {b1,b2,b3} + bridge a3-b1: after 3
     # sync sweeps the two cliques settle on two DIFFERENT labels — the
     # thin bridge can seed a label across (b1 tie-breaks to 'a3' in
@@ -206,14 +206,20 @@ def test_lpa_two_cliques_one_bridge(spark):
     # r1 b1->a3, r2 b2/b3->a3, r3 all of b on 'a3' while a stays 'a1'
     cl_a = [("a1", "a2"), ("a1", "a3"), ("a2", "a3")]
     cl_b = [("b1", "b2"), ("b1", "b3"), ("b2", "b3")]
-    out = {
-        r["host"]: r["community"]
-        for r in GR.lpa_communities(
-            _edges(spark, cl_a + cl_b + [("a3", "b1")]), rounds=3
-        ).collect()
-    }
+    edges = _edges(spark, cl_a + cl_b + [("a3", "b1")])
+
+    def run():
+        return {
+            r["host"]: r["community"]
+            for r in GR.lpa_communities(edges, rounds=3).collect()
+        }
+
+    out = run()
     assert {out["a1"], out["a2"], out["a3"]} == {"a1"}
     assert {out["b1"], out["b2"], out["b3"]} == {"a3"}
+    # the shuffled label side (above the broadcast threshold) agrees
+    with no_broadcast():
+        assert run() == out
 
 
 def test_lpa_plurality_tie_takes_min_label(spark):

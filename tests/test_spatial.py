@@ -530,7 +530,7 @@ def test_nn_join_cross_table_same_key(spark, pages_small):
     assert all(u != v for u, v in excl.items())
 
 
-def test_hotspots_components(spark):
+def test_hotspots_components(spark, no_broadcast):
     """Two adjacent hot cells merge; an isolated one keeps its own label;
     a pair straddling the longitude wrap seam merges too."""
     from pyspark.sql import functions as F
@@ -562,11 +562,19 @@ def test_hotspots_components(spark):
     assert len(got) == 5
 
     # the distributed label-propagation path computes identical components
-    dist = {
-        r["cell"]: r["hotspot_id"]
-        for r in S.hotspots_distributed(pages, res, mc).collect()
-    }
-    assert dist == got
+    def dist():
+        return {
+            r["cell"]: r["hotspot_id"]
+            for r in S.hotspots_distributed(pages, res, mc).collect()
+        }
+
+    assert dist() == got
+    # an isolated hot cell has no edge to carry a message: its own label
+    # rides through every sweep, broadcast or shuffled label side alike
+    with no_broadcast():
+        shuffled = dist()
+    assert shuffled[cell(4, 8)] == cell(4, 8)
+    assert shuffled == got
 
 
 def test_hotspots_driver_guard(spark, pages_small):

@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
 
 import verify_job as J  # noqa: E402
 

@@ -1,7 +1,8 @@
 """One-off parity smoke for the pages derivation (Spark vs DuckDB)."""
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 
